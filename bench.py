@@ -356,9 +356,9 @@ def bench_distributed_graph(spark) -> dict:
 def bench_distributed_graph_xl(spark, sf_dir: str | None = None) -> dict:
     """20M-edge block (4x the 5M block): the scale regime where the
     distributed paths must CROSS OVER the single-task numpy kernels,
-    and where the shuffle-state Pregel layout (broadcast_state=False —
-    the billion-vertex path that never broadcasts the vertex vector)
-    is timed end-to-end.  Louvain's crossover already shows at 5M
+    and where the shuffle-state Pregel layout (forced by setting
+    VERTEX_STATE_BROADCAST_LIMIT to 0 — the billion-vertex path that
+    never broadcasts the vertex vector) is timed end-to-end.  Louvain's crossover already shows at 5M
     (dist 21s vs local 44s, see the 5M block); SCC's did not, which is
     exactly why this block exists."""
     from pyspark.sql import functions as F
@@ -402,14 +402,24 @@ def bench_distributed_graph_xl(spark, sf_dir: str | None = None) -> dict:
         print(f"# dist-graph-xl {key}: {out[key]}s ({n} rows)", file=sys.stderr)
         ctrl()
 
+    def shuffle_state(kernel):
+        # the superstep driver picks its layout from |V| at call time;
+        # a limit of 0 forces shuffle-state for this one call
+        old = alg.VERTEX_STATE_BROADCAST_LIMIT
+        alg.VERTEX_STATE_BROADCAST_LIMIT = 0
+        try:
+            return kernel()
+        finally:
+            alg.VERTEX_STATE_BROADCAST_LIMIT = old
+
     timed(
         "pagerank_shuffle",
-        lambda: alg.pagerank(g, iterations=iters, local=False, broadcast_state=False),
+        lambda: shuffle_state(lambda: alg.pagerank(g, iterations=iters, local=False)),
     )
     timed("pagerank_local", lambda: alg.pagerank(g, iterations=iters, local=True))
     timed(
         "cc_shuffle",
-        lambda: alg.connected_components(g_sym, local=False, broadcast_state=False),
+        lambda: shuffle_state(lambda: alg.connected_components(g_sym, local=False)),
     )
     timed("cc_local", lambda: alg.connected_components(g_sym, local=True))
     timed("scc_dist", lambda: alg.strongly_connected_components(g, local=False))

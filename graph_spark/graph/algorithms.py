@@ -7,9 +7,11 @@ Dijkstra) round only at the output edge, as declared.
 
 from __future__ import annotations
 
+import itertools
 import weakref
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .property_graph import PropertyGraph
@@ -42,14 +44,6 @@ BETWEENNESS_REPLICATE_EDGE_LIMIT = 50_000_000
 VERTEX_STATE_BROADCAST_LIMIT = 4_000_000
 
 
-def _use_broadcast_state(nv: int, broadcast_state: bool | None) -> bool:
-    """Route a Pregel kernel's superstep join: explicit override wins,
-    else broadcast only while the vertex state is broadcast-sized."""
-    if broadcast_state is not None:
-        return bool(broadcast_state)
-    return nv <= VERTEX_STATE_BROADCAST_LIMIT
-
-
 def _attach_contributions(edges: DataFrame, contrib: DataFrame, broadcast: bool) -> DataFrame:
     """The ONE superstep join every Pregel kernel here shares: attach
     per-source messages (`contrib`, columns src + payload) to the
@@ -67,6 +61,66 @@ def _attach_contributions(edges: DataFrame, contrib: DataFrame, broadcast: bool)
     """
     rhs = F.broadcast(contrib) if broadcast else contrib
     return edges.join(rhs, "src")
+
+
+def _node_set(edges: DataFrame) -> DataFrame:
+    """Distinct endpoints of an edge frame: DataFrame(node)."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _vertex_supersteps(
+    edges: DataFrame,
+    init,
+    message,
+    combine,
+    update,
+    iterations: int,
+    schema: str,
+    delta=None,
+) -> DataFrame:
+    """The ONE vertex-state superstep driver, Pregelix's shape: a
+    superstep is vertex-state ⋈ messages, then a group-by combine, over
+    edges that never move.  A kernel is only a spec:
+
+    - ``init(nodes, nv)``: state keyed on ``node`` from the persisted
+      node set and |V|;
+    - ``message(state)``: the contribution frame (``src`` + payload);
+    - ``combine(attached)``: the combine over the edges with the
+      contributions attached (:func:`_attach_contributions`);
+    - ``update(state, combined)``: the next state;
+    - ``delta(state)`` (optional): the vertices that send next
+      superstep; the loop halts once it is empty (one ``take(1)``).
+
+    The driver owns the rest: the edge pre-partition (dst for
+    broadcast-state while |V| <= VERTEX_STATE_BROADCAST_LIMIT, else src
+    for shuffle-state), node-partitioned state checkpointed once per
+    superstep, and unpersisting.  No edges gives an empty `schema`
+    frame.  Returns the final state, all columns.
+    """
+    spark = edges.sparkSession
+    nodes = _node_set(edges).persist()  # read twice: the |V| count and the state init
+    nv = nodes.count()
+    if nv == 0:
+        nodes.unpersist()
+        return spark.createDataFrame([], schema)
+    bcast = nv <= VERTEX_STATE_BROADCAST_LIMIT
+    n_part = spark.sparkContext.defaultParallelism
+    edges = edges.repartition(n_part, "dst" if bcast else "src").persist()
+    state = init(nodes, nv).repartition(n_part, "node").localCheckpoint(eager=True)
+    nodes.unpersist()
+    active = state
+    for _ in range(iterations):
+        msgs = combine(_attach_contributions(edges, message(active), bcast))
+        state = update(state, msgs).localCheckpoint(eager=True)
+        active = state if delta is None else delta(state)
+        if delta is not None and not active.take(1):
+            break
+    edges.unpersist()
+    return state
 
 
 # edge-count memo keyed by the underlying DataFrame object: the catalog
@@ -91,58 +145,49 @@ def _edge_count(graph: PropertyGraph) -> int:
     return cnt
 
 
-def _factorize_edges(pdf):
+def _is_local(graph: PropertyGraph, local: bool | None) -> bool:
+    """The ONE routing rule of every routed kernel: an explicit `local`
+    wins; local=None picks the numpy kernel below LOCAL_EDGE_THRESHOLD
+    edges (one memoized count per edge frame, see :func:`_edge_count`)."""
+    return _edge_count(graph) < LOCAL_EDGE_THRESHOLD if local is None else local
+
+
+def _factorize_edges(pdf, sort: bool = False):
     """Hash-based node-id assignment (pd.factorize beats np.unique on
-    object arrays by ~10x).  Returns (nodes, src_codes, dst_codes)."""
+    object arrays by ~10x).  sort=True orders the codes like the ids, so
+    int-min == lexicographic string-min (the min-label kernels' tie
+    rule).  Returns (nodes, src_codes, dst_codes)."""
     import pandas as pd
 
     codes, nodes = pd.factorize(
-        pd.concat([pdf["src"], pdf["dst"]], ignore_index=True), sort=False
+        pd.concat([pdf["src"], pdf["dst"]], ignore_index=True), sort=sort
     )
     return nodes.to_numpy(), codes[: len(pdf)], codes[len(pdf):]
 
 
-def _local_pagerank_pdf(pdf, iterations: float, damping: float):
-    """numpy PageRank kernel over one pandas edge list (src, dst)."""
+def _local_rank_pdf(pdf, iterations: int, damping: float, sources=None, weight_col=None):
+    """numpy twin of :func:`_rank_propagation` over one pandas edge
+    list (src, dst, and `weight_col` unless it is None)."""
     import numpy as np
     import pandas as pd
 
     nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
-    deg = np.bincount(src, minlength=n).astype("float64")
-    rank = np.full(n, 1.0 / n)
+    w = np.ones(len(src)) if weight_col is None else pdf[weight_col].to_numpy(dtype="float64")
+    wout = np.bincount(src, weights=w, minlength=n)
+    if sources is None:
+        rank = np.full(n, 1.0 / n)
+        reset = (1.0 - damping) / n
+    else:
+        is_src = np.isin(nodes, np.asarray(list(sources), dtype=object))
+        ns = int(is_src.sum())
+        rank = np.where(is_src, 1.0 / ns if ns else 0.0, 0.0)
+        reset = (1.0 - damping) * rank
     for _ in range(int(iterations)):
-        contrib = np.where(deg > 0, rank / np.maximum(deg, 1), 0.0)
-        acc = np.bincount(dst, weights=contrib[src], minlength=n)
-        rank = (1.0 - damping) / n + damping * acc
+        per_w = np.where(wout > 0, rank / np.where(wout > 0, wout, 1.0), 0.0)
+        acc = np.bincount(dst, weights=per_w[src] * w, minlength=n)
+        rank = reset + damping * acc
     return pd.DataFrame({"node": nodes, "rank": rank})
-
-
-def _local_bfs_pdf(pdf, source: str, max_hops: int):
-    import numpy as np
-    import pandas as pd
-
-    nodes, src, dst = _factorize_edges(pdf)
-    n = len(nodes)
-    hits_src = np.nonzero(nodes == source)[0]
-    if len(hits_src) == 0:
-        return pd.DataFrame({"node": [source], "d": [0]})
-    sid = int(hits_src[0])
-    dist = np.full(n, -1, dtype="int64")
-    dist[sid] = 0
-    frontier = np.zeros(n, dtype=bool)
-    frontier[sid] = True
-    for hop in range(1, max_hops + 1):
-        hits = frontier[src]
-        nxt = np.zeros(n, dtype=bool)
-        nxt[dst[hits]] = True
-        nxt &= dist < 0
-        if not nxt.any():
-            break
-        dist[nxt] = hop
-        frontier = nxt
-    mask = dist >= 0
-    return pd.DataFrame({"node": nodes[mask], "d": dist[mask]})
 
 
 def _local_cc_pdf(pdf):
@@ -151,16 +196,8 @@ def _local_cc_pdf(pdf):
     import numpy as np
     import pandas as pd
 
-    nodes, src, dst = _factorize_edges(pdf)
-    n = len(nodes)
-    # relabel so that smaller int == lexicographically smaller node id
-    order = np.argsort(nodes)
-    rank_of = np.empty(n, dtype="int64")
-    rank_of[order] = np.arange(n)
-    src = rank_of[src]
-    dst = rank_of[dst]
-    nodes = nodes[order]
-    label = np.arange(n)
+    nodes, src, dst = _factorize_edges(pdf, sort=True)
+    label = np.arange(len(nodes))
     while True:
         new = label.copy()
         np.minimum.at(new, dst, label[src])
@@ -170,24 +207,30 @@ def _local_cc_pdf(pdf):
     return pd.DataFrame({"node": nodes, "component": nodes[label]})
 
 
+def _local_peel(src, dst, n: int, alive, k: int, max_rounds: int | None = None):
+    """numpy twin of :func:`_peel`: same round semantics (degree over
+    the alive edges by src, keep deg>=k, drop edges losing either end).
+    Returns the alive-edge mask of the k-core."""
+    import numpy as np
+
+    rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    for _ in rounds:
+        keep = np.bincount(src[alive], minlength=n) >= k
+        new_alive = alive & keep[src] & keep[dst]
+        if int(new_alive.sum()) == int(alive.sum()):
+            break
+        alive = new_alive
+    return alive
+
+
 def _local_kcore_pdf(pdf, k: int, max_iter: int):
-    """numpy k-core peel: same round semantics as the distributed loop
-    (degree over current edges by src, keep deg>=k, filter both ends)."""
+    """numpy k-core: one level of the coreness peel."""
     import numpy as np
     import pandas as pd
 
     nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
-    src = np.asarray(src)
-    dst = np.asarray(dst)
-    alive = np.ones(len(src), dtype=bool)
-    for _ in range(max_iter):
-        deg = np.bincount(src[alive], minlength=n)
-        keep = deg >= k
-        new_alive = alive & keep[src] & keep[dst]
-        if int(new_alive.sum()) == int(alive.sum()):
-            break
-        alive = new_alive
+    alive = _local_peel(src, dst, n, np.ones(len(src), dtype=bool), k, max_iter)
     deg = np.bincount(src[alive], minlength=n)
     mask = deg > 0
     return pd.DataFrame({"node": nodes[mask], "degree": deg[mask].astype("int64")})
@@ -199,17 +242,12 @@ def _local_lp_pdf(pdf, max_iter: int):
     import numpy as np
     import pandas as pd
 
-    nodes, src, dst = _factorize_edges(pdf)
-    n = len(nodes)
-    order = np.argsort(nodes)
-    rank_of = np.empty(n, dtype="int64")
-    rank_of[order] = np.arange(n)
-    label = np.arange(n)
+    nodes, src, dst = _factorize_edges(pdf, sort=True)
+    label = np.arange(len(nodes))
     for _ in range(max_iter):
         t = pd.DataFrame({"d": dst, "lab": label[src]})
         cnt = t.groupby(["d", "lab"], sort=False).size().reset_index(name="c")
-        cnt["r"] = rank_of[cnt["lab"].to_numpy()]
-        cnt = cnt.sort_values(["d", "c", "r"], ascending=[True, False, True])
+        cnt = cnt.sort_values(["d", "c", "lab"], ascending=[True, False, True])
         best = cnt.drop_duplicates("d", keep="first")
         new_label = label.copy()
         new_label[best["d"].to_numpy()] = best["lab"].to_numpy()
@@ -308,6 +346,42 @@ def _run_local(
     return graph.edges.select(*cols).coalesce(1).mapInPandas(run, schema=schema)
 
 
+def _frontier_reach(
+    edges: DataFrame, seeds: DataFrame, max_hops: int, keys: tuple = (), reverse: bool = False
+) -> DataFrame:
+    """The ONE frontier loop behind bfs_distances, multi_source_bfs and
+    the SCC reach: expand `seeds` (*keys, node, optional d) hop by hop
+    along `edges` (backward when `reverse`), subtracting the visited
+    pairs.  State is keyed (*keys, node) — `lm` for landmarks, `part`
+    for SCC partitions; a key the edges also carry restricts each hop
+    to its own edges — so many sources cost the supersteps of the
+    deepest one.  Seeds with `d` get the hop number as `d`.  Frontier
+    and visited (|V|-bounded) are broadcast so the edges never
+    re-shuffle.  `max_hops` is a horizon, not a convergence proof.
+    Returns the visited frame, seeds included."""
+    a, b = ("dst", "src") if reverse else ("src", "dst")
+    keys = list(keys)
+    on = [k for k in keys if k in edges.columns] + [a]
+    visited = seeds.localCheckpoint(eager=True)
+    frontier = visited
+    for hop in range(1, max_hops + 1):
+        nxt = (
+            edges.join(F.broadcast(frontier.select(*keys, F.col("node").alias(a))), on)
+            .select(*keys, F.col(b).alias("node"))
+            .distinct()
+        )
+        frontier = nxt.join(
+            F.broadcast(visited.select(*keys, "node")), [*keys, "node"], "left_anti"
+        )
+        if "d" in seeds.columns:
+            frontier = frontier.withColumn("d", F.lit(hop))
+        frontier = frontier.localCheckpoint(eager=True)
+        if not frontier.take(1):
+            break
+        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
+    return visited
+
+
 def bfs_distances(
     graph: PropertyGraph, source: str, max_hops: int, local: bool | None = None
 ) -> DataFrame:
@@ -319,74 +393,46 @@ def bfs_distances(
     local=None auto-routes small graphs to the numpy kernel (identical
     semantics, one task); the distributed loop is the 100 TB path.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(
-            graph, lambda pdf: _local_bfs_pdf(pdf, source, max_hops), "node string, d long"
+            graph,
+            lambda pdf: _local_multi_bfs_pdf(pdf, [source], max_hops)[["node", "d"]],
+            "node string, d long",
         )
-    spark = graph.edges.sparkSession
-    visited = spark.createDataFrame([(source, 0)], ["node", "d"]).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        fr = F.broadcast(frontier.select("node"))
-        nxt = (
-            graph.edges.join(fr, graph.edges.src == fr.node, "inner")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            nxt.join(F.broadcast(visited.select(F.col("node").alias("vn"))),
-                     nxt.node == F.col("vn"), "left_anti")
-            .withColumn("d", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if not frontier.take(1):
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
+    seeds = graph.edges.sparkSession.createDataFrame([(source, 0)], ["node", "d"])
+    return _frontier_reach(graph.edges, seeds, max_hops)
 
 
 def _local_multi_bfs_pdf(pdf, sources, max_hops: int):
-    """numpy multi-source BFS kernel: one adjacency build, one BFS per
-    landmark over it."""
+    """numpy twin of :func:`_frontier_reach` for landmark BFS (the local
+    bfs_distances is the one-landmark case); an absent landmark is
+    reported at distance 0 from itself, like the distributed seed."""
     import numpy as np
     import pandas as pd
 
     nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
-    idx = {v: i for i, v in enumerate(nodes)}
-    order = np.argsort(src, kind="stable")
-    s_sorted, d_sorted = src[order], dst[order]
-    starts = np.searchsorted(s_sorted, np.arange(n + 1))
-    out_lm, out_node, out_d = [], [], []
-    for lm in sources:
-        if lm not in idx:
-            # absent-landmark convention: report the landmark itself at
-            # distance 0 (matches the distributed seed and
-            # bfs_distances' documented behavior on both paths)
-            out_lm.append(lm)
-            out_node.append(lm)
-            out_d.append(0)
+    parts = []
+    for lm, i in zip(sources, pd.Index(nodes).get_indexer(list(sources))):
+        if i < 0:
+            parts.append(pd.DataFrame({"lm": [lm], "node": [lm], "d": [0]}))
             continue
         dist = np.full(n, -1, dtype="int64")
-        dist[idx[lm]] = 0
-        frontier = [idx[lm]]
+        dist[i] = 0
+        frontier = dist == 0
         for hop in range(1, max_hops + 1):
-            nxt = []
-            for u in frontier:
-                for v in d_sorted[starts[u]:starts[u + 1]]:
-                    if dist[v] < 0:
-                        dist[v] = hop
-                        nxt.append(v)
-            if not nxt:
+            nxt = np.zeros(n, dtype=bool)
+            nxt[dst[frontier[src]]] = True
+            nxt &= dist < 0
+            if not nxt.any():
                 break
+            dist[nxt] = hop
             frontier = nxt
         reached = np.flatnonzero(dist >= 0)
-        out_lm.extend([lm] * len(reached))
-        out_node.extend(nodes[reached])
-        out_d.extend(dist[reached])
-    return pd.DataFrame({"lm": out_lm, "node": out_node, "d": out_d})
+        parts.append(pd.DataFrame({"lm": lm, "node": nodes[reached], "d": dist[reached]}))
+    if not parts:
+        return pd.DataFrame({"lm": [], "node": [], "d": []})
+    return pd.concat(parts, ignore_index=True)
 
 
 def multi_source_bfs(
@@ -398,129 +444,134 @@ def multi_source_bfs(
     closeness/eccentricity at scale, where per-node exact centrality
     (O(V) BFS runs) is infeasible.  Returns DataFrame(lm, node, d).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_multi_bfs_pdf(pdf, sources, max_hops),
             "lm string, node string, d long",
         )
-    spark = graph.edges.sparkSession
-    visited = spark.createDataFrame(
+    seeds = graph.edges.sparkSession.createDataFrame(
         [(s, s, 0) for s in sources], ["lm", "node", "d"]
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        fr = F.broadcast(frontier.select("lm", "node"))
-        nxt = (
-            graph.edges.join(fr, graph.edges.src == fr.node, "inner")
-            .select("lm", F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            nxt.join(
-                F.broadcast(
-                    visited.select(F.col("lm").alias("vlm"), F.col("node").alias("vn"))
-                ),
-                (nxt.lm == F.col("vlm")) & (nxt.node == F.col("vn")),
-                "left_anti",
-            )
-            .withColumn("d", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if not frontier.take(1):
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
-
-
-def k_hop_count(graph: PropertyGraph, source: str, k: int) -> int:
-    """Count of distinct nodes reachable within k hops (excluding none —
-    source counts if reachable per BFS semantics including distance 0)."""
-    return bfs_distances(graph, source, k).count()
+    )
+    return _frontier_reach(graph.edges, seeds, max_hops, keys=("lm",))
 
 
 def connected_components(
-    graph: PropertyGraph,
-    max_iter: int = 50,
-    local: bool | None = None,
-    broadcast_state: bool | None = None,
+    graph: PropertyGraph, max_iter: int = 50, local: bool | None = None
 ) -> DataFrame:
     """Min-id label propagation to fixpoint over (assumed symmetric)
     edges.  Returns DataFrame(node, component) where component is the
     lexicographically smallest reachable node id.
 
-    broadcast_state=None auto-picks the superstep join layout (see
-    :func:`pagerank` / :func:`_attach_contributions`): above
-    VERTEX_STATE_BROADCAST_LIMIT vertices the delta set joins an
-    src-partitioned edge copy instead of broadcasting, so the
-    first rounds (delta == |V|) never broadcast the state vector.
+    Runs on :func:`_vertex_supersteps` with delta propagation: a node's
+    label only decreases, and a neighbor's new minimum can only arrive
+    from a node whose label CHANGED last round — so only the delta set
+    sends messages.  Round 1 everyone is a delta; after the first couple
+    of rounds the delta collapses to the still-converging fringe, so
+    late rounds cost almost nothing even on diameter-bound graphs.
+    Above VERTEX_STATE_BROADCAST_LIMIT vertices the delta joins the
+    src-partitioned edge copy instead of being broadcast, so the first
+    rounds (delta == |V|) never broadcast the state vector.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(graph, _local_cc_pdf, "node string, component string")
-    spark = graph.edges.sparkSession
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
-    )
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    # see pagerank: the edge layout is keyed by the superstep mode —
-    # dst pre-partitioning makes the per-round combine exchange-free
-    # under the broadcast join; src pre-partitioning co-partitions the
-    # edges with the (node-keyed) delta for the shuffle-state join
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(spark.sparkContext.defaultParallelism, "dst" if bcast else "src")
-        .persist()
-    )
-    state = (
-        nodes.select("node", F.col("node").alias("component"))
-        .repartition(spark.sparkContext.defaultParallelism, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    # Delta propagation: a node's label only decreases, and a neighbor's
-    # new minimum can only arrive from a node whose label CHANGED last
-    # round — so only the delta set sends messages.  Round 1 everyone is
-    # a delta; after the first couple of rounds the delta (and its
-    # broadcast) collapses to the still-converging fringe, so late
-    # rounds cost almost nothing even on diameter-bound graphs.
-    delta = state
-    for _ in range(max_iter):
-        msgs = (
-            _attach_contributions(edges, delta.withColumnRenamed("node", "src"), bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
+    schema = "node string, component string"
+    if _is_local(graph, local):
+        return _run_local(graph, _local_cc_pdf, schema)
+
+    def update(state, msgs):
         # keep old + new side by side in ONE checkpointed frame so the
         # delta extraction is a cheap filter on it, not a second
         # state-vs-state sort-merge join per round
-        step = (
-            state.join(msgs.withColumnRenamed("node", "mnode"),
-                       state.node == F.col("mnode"), "left")
-            .select(
-                "node",
-                F.col("component").alias("old_component"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_min"), F.col("component")),
-                ).alias("component"),
+        return state.join(
+            msgs.withColumnRenamed("node", "mnode"), state.node == F.col("mnode"), "left"
+        ).select(
+            "node",
+            F.col("component").alias("old_component"),
+            F.least(
+                F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+            ).alias("component"),
+        )
+
+    return _vertex_supersteps(
+        graph.edges.select("src", "dst"),
+        init=lambda nodes, nv: nodes.select("node", F.col("node").alias("component")),
+        message=lambda delta: delta.select(F.col("node").alias("src"), "component"),
+        combine=lambda att: att.groupBy(F.col("dst").alias("node")).agg(
+            F.min("component").alias("nbr_min")
+        ),
+        update=update,
+        iterations=max_iter,
+        schema=schema,
+        delta=lambda state: state.filter(
+            F.col("component") != F.col("old_component")
+        ).select("node", "component"),
+    ).select("node", "component")
+
+
+def _rank_propagation(
+    graph: PropertyGraph,
+    iterations: int,
+    damping: float,
+    local: bool | None,
+    sources: list | None = None,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The ONE rank propagation behind pagerank, pagerank_weighted and
+    personalized_pagerank: rank splits across out-edges by weight (unit
+    weights without `weight_col`, i.e. 1/out-degree), and each
+    superstep rank = reset + damping * inflow.  Teleport is uniform
+    over |V|, or 1/|S| over the `sources` present (zero mass when none
+    is).  The distributed state CARRIES the out-weight — one init join
+    instead of a per-superstep degree join, measured 3.2x (38 s -> 12 s)
+    for 10 iterations on a 5M-edge graph.  Returns DataFrame(node, rank).
+    """
+    schema = "node string, rank double"
+    if _is_local(graph, local):
+        return _run_local(
+            graph,
+            lambda pdf: _local_rank_pdf(pdf, iterations, damping, sources, weight_col),
+            schema,
+            cols=("src", "dst") if weight_col is None else ("src", "dst", weight_col),
+        )
+    weight = [] if weight_col is None else [F.col(weight_col).cast("double").alias("weight")]
+    edges = graph.edges.select("src", "dst", *weight)
+    outw = F.count(F.lit(1)) if weight_col is None else F.sum("weight")
+    inflow = F.col("w") if weight_col is None else F.col("w") * F.col("weight")
+    reset = None
+
+    def init(nodes, nv):
+        nonlocal reset
+        if sources is None:
+            tele = F.lit(1.0 / nv)
+            reset = F.lit((1.0 - damping) / nv)
+        else:
+            src_set = [str(s) for s in sources]
+            ns = nodes.filter(F.col("node").isin(src_set)).count()
+            tele = F.when(F.col("node").isin(src_set), F.lit(1.0 / ns if ns else 0.0)).otherwise(
+                F.lit(0.0)
             )
-            .localCheckpoint(eager=True)
+            reset = F.lit(1.0 - damping) * tele
+        deg = edges.groupBy(F.col("src").alias("node")).agg(outw.alias("ws"))
+        return nodes.join(deg, "node", "left").select(
+            "node", F.coalesce("ws", F.lit(0)).alias("ws"), tele.alias("rank")
         )
-        delta = step.filter(F.col("component") != F.col("old_component")).select(
-            "node", "component"
-        )
-        state = step.select("node", "component")
-        if not delta.take(1):
-            break
-    edges.unpersist()
-    return state
+
+    return _vertex_supersteps(
+        edges,
+        init=init,
+        message=lambda state: state.filter((F.col("ws") > 0) & (F.col("rank") != 0)).select(
+            F.col("node").alias("src"), (F.col("rank") / F.col("ws")).alias("w")
+        ),
+        combine=lambda att: att.groupBy(F.col("dst").alias("node")).agg(
+            F.sum(inflow).alias("acc")
+        ),
+        update=lambda state, msgs: state.join(msgs, "node", "left").select(
+            "node",
+            "ws",
+            (reset + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("rank"),
+        ),
+        iterations=iterations,
+        schema=schema,
+    ).select("node", "rank")
 
 
 def pagerank(
@@ -528,132 +579,20 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     local: bool | None = None,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Classic PageRank, uniform init 1/|V|, damping default 0.85,
     contributions along `edges` split by out-degree.  Nodes with no
     in-edges get the teleport term only.  Returns DataFrame(node, rank).
 
-    Distributed superstep cost: ONE shuffle (message combine by dst).
-    broadcast_state=None auto-picks the superstep join layout: rank
+    Distributed superstep cost: ONE shuffle (message combine by dst),
+    in the layout :func:`_vertex_supersteps` picks from |V| — rank
     broadcast onto dst-partitioned edges while |V| <=
-    VERTEX_STATE_BROADCAST_LIMIT, else the shuffle-state layout
-    (state co-partitioned with an src-partitioned edge copy — see
-    :func:`_attach_contributions`) so billion-vertex graphs never
+    VERTEX_STATE_BROADCAST_LIMIT, else the shuffle-state layout (see
+    :func:`_attach_contributions`), so billion-vertex graphs never
     broadcast the state vector.  Small graphs auto-route to the numpy
     kernel (local=None).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(
-            graph,
-            lambda pdf: _local_pagerank_pdf(pdf, iterations, damping),
-            "node string, rank double",
-        )
-    spark0 = graph.edges.sparkSession
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
-    )
-    nv = nodes.count()
-    if nv == 0:
-        return spark0.createDataFrame([], "node string, rank double")
-
-    # Pre-partition edges ONCE, keyed by the superstep layout: broadcast
-    # mode keys on dst (the broadcast join preserves it, so the
-    # per-superstep groupBy(dst) combine needs no exchange); shuffle
-    # mode keys on src (co-partitioned with state, so the contribution
-    # join needs no exchange and the dst combine is the one shuffle).
-    # State CARRIES the out-degree (one init join instead of a
-    # rank-x-outdeg sort-merge join per superstep) and is pre-partitioned
-    # on node, the same key the message combine emits, so the
-    # state-update join is exchange-free too — measured 3.2x
-    # (38 s -> 12 s) for 10 iterations on a 5M-edge synthetic graph.
-    bcast = _use_broadcast_state(nv, broadcast_state)
-    spark = graph.edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    outdeg = graph.edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    state = (
-        nodes.join(outdeg, "node", "left")
-        .select(
-            "node",
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.lit(1.0 / nv).alias("rank"),
-        )
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        contrib = state.filter(F.col("deg") > 0).select(
-            F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("w")
-        )
-        msgs = (
-            _attach_contributions(edges, contrib, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("w").alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                "deg",
-                (F.lit((1.0 - damping) / nv) + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "rank")
-
-
-def _local_ppr_pdf(pdf, sources, iterations: int, damping: float):
-    """numpy personalized-PageRank kernel over one pandas edge list."""
-    import numpy as np
-    import pandas as pd
-
-    nodes, src, dst = _factorize_edges(pdf)
-    n = len(nodes)
-    deg = np.bincount(src, minlength=n).astype("float64")
-    is_src = np.isin(nodes, np.asarray(list(sources), dtype=object))
-    ns = int(is_src.sum())
-    if ns == 0:
-        return pd.DataFrame({"node": nodes, "rank": np.zeros(n)})
-    tele = np.where(is_src, 1.0 / ns, 0.0)
-    rank = tele.copy()
-    for _ in range(int(iterations)):
-        contrib = np.where(deg > 0, rank / np.maximum(deg, 1), 0.0)
-        acc = np.bincount(dst, weights=contrib[src], minlength=n)
-        rank = (1.0 - damping) * tele + damping * acc
-    return pd.DataFrame({"node": nodes, "rank": rank})
-
-
-def _local_wpagerank_pdf(pdf, iterations: int, damping: float):
-    """numpy weighted-PageRank kernel over one pandas (src, dst, weight)
-    edge list: contributions split proportionally to edge weight."""
-    import numpy as np
-    import pandas as pd
-
-    nodes, src, dst = _factorize_edges(pdf)
-    n = len(nodes)
-    w = pdf["weight"].to_numpy(dtype="float64")
-    wout = np.bincount(src, weights=w, minlength=n)
-    rank = np.full(n, 1.0 / n)
-    for _ in range(int(iterations)):
-        per_w = np.where(wout > 0, rank / np.where(wout > 0, wout, 1.0), 0.0)
-        acc = np.bincount(dst, weights=per_w[src] * w, minlength=n)
-        rank = (1.0 - damping) / n + damping * acc
-    return pd.DataFrame({"node": nodes, "rank": rank})
+    return _rank_propagation(graph, iterations, damping, local)
 
 
 def pagerank_weighted(
@@ -662,80 +601,18 @@ def pagerank_weighted(
     damping: float = 0.85,
     weight_col: str = "weight",
     local: bool | None = None,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """PageRank with edge-weight-proportional mass distribution (the
     Neo4j GDS `relationshipWeightProperty` variant): a node's rank is
     split across out-edges as weight/sum(out-weights) instead of 1/deg.
     Uniform init 1/|V|; teleport (1-d)/|V|.  Returns (node, rank).
 
-    Superstep cost model is IDENTICAL to `pagerank` — one message
-    combine on dst over stationary pre-partitioned edges, rank and
-    out-weight frames broadcast — weights ride the edge rows that never
+    Superstep cost model is IDENTICAL to `pagerank` (the same
+    :func:`_rank_propagation`) — weights ride the edge rows that never
     move, so the weighted variant is free at 100 TB relative to the
     unweighted one.  Small graphs auto-route to the numpy kernel.
     """
-    edges3 = graph.edges.select("src", "dst", F.col(weight_col).cast("double").alias("weight"))
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(
-            PropertyGraph(graph.vertices, edges3),
-            lambda pdf: _local_wpagerank_pdf(pdf, iterations, damping),
-            "node string, rank double",
-            cols=("src", "dst", "weight"),
-        )
-    nodes = (
-        edges3.select(F.col("src").alias("node"))
-        .union(edges3.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    nv = nodes.count()
-    spark = edges3.sparkSession
-    if nv == 0:
-        nodes.unpersist()
-        return spark.createDataFrame([], "node string, rank double")
-    n_part = spark.sparkContext.defaultParallelism
-    bcast = _use_broadcast_state(nv, broadcast_state)
-    edges = edges3.repartition(n_part, "dst" if bcast else "src").persist()
-    edges.count()
-    # state carries out-weight; see `pagerank` for the superstep layout
-    outw = edges3.groupBy(F.col("src").alias("node")).agg(F.sum("weight").alias("ws"))
-    state = (
-        nodes.join(outw, "node", "left")
-        .select(
-            "node",
-            F.coalesce("ws", F.lit(0.0)).alias("ws"),
-            F.lit(1.0 / nv).alias("rank"),
-        )
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        per_w = state.filter(F.col("ws") > 0).select(
-            F.col("node").alias("src"), (F.col("rank") / F.col("ws")).alias("pw")
-        )
-        msgs = (
-            _attach_contributions(edges, per_w, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pw") * F.col("weight")).alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                "ws",
-                (
-                    F.lit((1.0 - damping) / nv)
-                    + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "rank")
+    return _rank_propagation(graph, iterations, damping, local, weight_col=weight_col)
 
 
 def incremental_components(labels: DataFrame, new_edges: DataFrame) -> DataFrame:
@@ -762,12 +639,7 @@ def incremental_components(labels: DataFrame, new_edges: DataFrame) -> DataFrame
     evolving-graph maintenance path: label once, absorb edge batches.
     """
     lab = labels.select("node", "component")
-    ends = (
-        new_edges.select(F.col("src").alias("node"))
-        .union(new_edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    fresh = ends.join(lab, "node", "left_anti").select(
+    fresh = _node_set(new_edges).join(lab, "node", "left_anti").select(
         "node", F.col("node").alias("component")
     )
     lab_all = lab.unionByName(fresh).localCheckpoint(eager=True)
@@ -813,7 +685,6 @@ def katz_centrality(
     iterations: int = 6,
     alpha: float = 0.005,
     local: bool | None = None,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Truncated Katz centrality: x = sum_{k<=T} alpha^k (A^T)^k 1,
     computed as T rounds of x <- 1 + alpha * A^T x (beta = 1).  Unlike
@@ -824,57 +695,24 @@ def katz_centrality(
     finite and is what both engines compute.  Returns (node, katz).
 
     Distributed superstep cost is pagerank's minus the degree join:
-    ONE message combine on dst over stationary pre-partitioned edges,
-    the x-vector broadcast.  Small graphs auto-route to numpy.
+    ONE message combine on dst over stationary pre-partitioned edges
+    (:func:`_vertex_supersteps`).  Small graphs auto-route to numpy.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(
-            graph,
-            lambda pdf: _local_katz_pdf(pdf, iterations, alpha),
-            "node string, katz double",
-        )
-    spark = graph.edges.sparkSession
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
-    )
-    n_part = spark.sparkContext.defaultParallelism
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    state = (
-        nodes.select("node", F.lit(1.0).alias("katz"))
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        xs = state.select(F.col("node").alias("src"), F.col("katz").alias("x"))
-        msgs = (
-            _attach_contributions(edges, xs, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                (F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("acc"), F.lit(0.0))).alias(
-                    "katz"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "katz")
+    schema = "node string, katz double"
+    if _is_local(graph, local):
+        return _run_local(graph, lambda pdf: _local_katz_pdf(pdf, iterations, alpha), schema)
+    return _vertex_supersteps(
+        graph.edges.select("src", "dst"),
+        init=lambda nodes, nv: nodes.select("node", F.lit(1.0).alias("katz")),
+        message=lambda state: state.select(F.col("node").alias("src"), F.col("katz").alias("x")),
+        combine=lambda att: att.groupBy(F.col("dst").alias("node")).agg(F.sum("x").alias("acc")),
+        update=lambda state, msgs: state.join(msgs, "node", "left").select(
+            "node",
+            (F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("katz"),
+        ),
+        iterations=iterations,
+        schema=schema,
+    ).select("node", "katz")
 
 
 def _local_louvain_pdf(pdf, rounds: int):
@@ -884,14 +722,8 @@ def _local_louvain_pdf(pdf, rounds: int):
     import numpy as np
     import pandas as pd
 
-    nodes, src0, dst0 = _factorize_edges(pdf)
-    n = len(nodes)
-    order = np.argsort(nodes)
-    rank_of = np.empty(n, dtype="int64")
-    rank_of[order] = np.arange(n)
-    snodes = nodes[order]  # snodes[rank] = node string
-    src = rank_of[src0]
-    dst = rank_of[dst0]
+    snodes, src, dst = _factorize_edges(pdf, sort=True)
+    n = len(snodes)
     m2 = len(src)
     k = np.bincount(src, minlength=n).astype("int64")
     comm = np.arange(n, dtype="int64")
@@ -917,7 +749,7 @@ def _local_louvain_pdf(pdf, rounds: int):
         first[1:] = v_s[1:] != v_s[:-1]
         comm = comm.copy()
         comm[v_s[first]] = c_s[first]
-    return pd.DataFrame({"node": snodes[np.arange(n)], "comm": snodes[comm]})
+    return pd.DataFrame({"node": snodes, "comm": snodes[comm]})
 
 
 def louvain_local_rounds(
@@ -940,9 +772,7 @@ def louvain_local_rounds(
     stationary edges, community sizes broadcast.  Small graphs
     auto-route to the numpy kernel.  Returns DataFrame(node, comm).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_louvain_pdf(pdf, rounds),
@@ -1013,83 +843,28 @@ def personalized_pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     local: bool | None = None,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass restricted to `sources`
-    (uniform 1/|S| init and reset).  Same superstep shape as `pagerank`
-    — ONE shuffle per iteration (message combine on dst over edges
-    pre-partitioned by dst), rank/out-degree broadcast — so the 100 TB
-    cost model is identical; only the teleport vector changes.
+    (uniform 1/|S| init and reset).  Same superstep as `pagerank` (the
+    same :func:`_rank_propagation`) — ONE shuffle per iteration, so the
+    100 TB cost model is identical; only the teleport vector changes.
     Returns DataFrame(node, rank).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(
-            graph,
-            lambda pdf: _local_ppr_pdf(pdf, sources, iterations, damping),
-            "node string, rank double",
-        )
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
+    return _rank_propagation(graph, iterations, damping, local, sources=sources)
+
+
+def _triangles(pairs: DataFrame) -> DataFrame:
+    """Every triangle a<b<c of canonical undirected pairs (s1 < s2), by
+    the three-way self-join; at scale, the canonical orientation halves
+    every join input.  Returns (a, b, c)."""
+    e1 = pairs.select(F.col("s1").alias("a"), F.col("s2").alias("b"))
+    e2 = pairs.select(F.col("s1").alias("b2"), F.col("s2").alias("c2"))
+    e3 = pairs.select(F.col("s1").alias("a3"), F.col("s2").alias("c3"))
+    return (
+        e1.join(e2, e1.b == e2.b2, "inner")
+        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c2") == F.col("c3")), "inner")
+        .select("a", "b", F.col("c2").alias("c"))
     )
-    src_set = [str(s) for s in sources]
-    ns = nodes.filter(F.col("node").isin(src_set)).count()
-    spark = graph.edges.sparkSession
-    if ns == 0:
-        # no seed present in the graph: zero teleport mass everywhere
-        # (materialize before unpersisting the frame the plan reads)
-        out = nodes.select("node", F.lit(0.0).alias("rank")).localCheckpoint(
-            eager=True
-        )
-        nodes.unpersist()
-        return out
-    tele = F.when(F.col("node").isin(src_set), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
-    n_part = spark.sparkContext.defaultParallelism
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    # state carries out-degree; see `pagerank` for the superstep layout
-    outdeg = graph.edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    state = (
-        nodes.join(outdeg, "node", "left")
-        .select("node", F.coalesce("deg", F.lit(0)).alias("deg"), tele.alias("rank"))
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        contrib = state.filter((F.col("deg") > 0) & (F.col("rank") != 0)).select(
-            F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("w")
-        )
-        msgs = (
-            _attach_contributions(edges, contrib, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("w").alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit(1.0 - damping) * tele
-                    + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "rank")
 
 
 def triangle_count(edges_undirected_pairs: DataFrame) -> DataFrame:
@@ -1098,14 +873,7 @@ def triangle_count(edges_undirected_pairs: DataFrame) -> DataFrame:
     self-join; at scale, pre-filter to the canonical orientation halves
     every join input (done here by construction).
     Returns a 1-row DataFrame(n_triangles)."""
-    e1 = edges_undirected_pairs.select(F.col("s1").alias("a"), F.col("s2").alias("b"))
-    e2 = edges_undirected_pairs.select(F.col("s1").alias("b2"), F.col("s2").alias("c2"))
-    e3 = edges_undirected_pairs.select(F.col("s1").alias("a3"), F.col("s2").alias("c3"))
-    tri = (
-        e1.join(e2, e1.b == e2.b2, "inner")
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c2") == F.col("c3")), "inner")
-    )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    return _triangles(edges_undirected_pairs).agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def edge_triangle_support(edges_undirected_pairs: DataFrame) -> DataFrame:
@@ -1116,14 +884,7 @@ def edge_triangle_support(edges_undirected_pairs: DataFrame) -> DataFrame:
     edge endpoints, map-side combinable.  Edges in no triangle are
     absent (support 0).  Returns (s1, s2, support).
     """
-    e1 = edges_undirected_pairs.select(F.col("s1").alias("a"), F.col("s2").alias("b"))
-    e2 = edges_undirected_pairs.select(F.col("s1").alias("b2"), F.col("s2").alias("c2"))
-    e3 = edges_undirected_pairs.select(F.col("s1").alias("a3"), F.col("s2").alias("c3"))
-    tri = (
-        e1.join(e2, e1.b == e2.b2, "inner")
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c2") == F.col("c3")), "inner")
-        .select("a", "b", F.col("c2").alias("c"))
-    )
+    tri = _triangles(edges_undirected_pairs)
     sup = (
         tri.select(F.col("a").alias("s1"), F.col("b").alias("s2"))
         .unionAll(tri.select(F.col("b").alias("s1"), F.col("c").alias("s2")))
@@ -1144,9 +905,7 @@ def shortest_paths_weighted(
     fixpoint).  Returns DataFrame(node, dist).  Hash-declared with
     integer weights (g14); small graphs auto-route to the numpy kernel
     with identical per-round semantics."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_sssp_pdf(pdf, source, weight_col, max_iter),
@@ -1256,27 +1015,12 @@ def shortest_paths_delta_stepping(
     return dist
 
 
-def k_core(
-    graph: PropertyGraph, k: int, max_iter: int = 100, local: bool | None = None
-) -> DataFrame:
-    """k-core decomposition membership: iteratively peel nodes with
-    degree < k over (assumed symmetric) edges until stable.  Returns
-    DataFrame(node, degree) for the surviving core.
-
-    Each round: degree count (one shuffle) + semi-join edge filter;
-    rounds <= peel depth.  At 100 TB the edge table shrinks
-    monotonically, so persist-and-replace per round keeps lineage and
-    scan size bounded.  Small graphs auto-route to the numpy kernel."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(
-            graph,
-            lambda pdf: _local_kcore_pdf(pdf, k, max_iter),
-            "node string, degree long",
-        )
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-    for _ in range(max_iter):
+def _peel(edges: DataFrame, k: int, max_rounds: int | None = None) -> DataFrame:
+    """Peel checkpointed (src, dst) edges to the k-core — the round
+    k_core documents — until the fixpoint or `max_rounds` rounds.
+    Returns the surviving edges, checkpointed."""
+    rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    for _ in rounds:
         deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(eager=True)
         n_before = edges.count()
@@ -1288,15 +1032,37 @@ def k_core(
         )
         if edges.count() == n_before:
             break
+    return edges
+
+
+def k_core(
+    graph: PropertyGraph, k: int, max_iter: int = 100, local: bool | None = None
+) -> DataFrame:
+    """k-core decomposition membership: iteratively peel nodes with
+    degree < k over (assumed symmetric) edges until stable.  Returns
+    DataFrame(node, degree) for the surviving core.
+
+    Each round: degree count (one shuffle) + semi-join edge filter;
+    rounds <= peel depth.  At 100 TB the edge table shrinks
+    monotonically, so persist-and-replace per round keeps lineage and
+    scan size bounded.  Small graphs auto-route to the numpy kernel."""
+    if _is_local(graph, local):
+        return _run_local(
+            graph,
+            lambda pdf: _local_kcore_pdf(pdf, k, max_iter),
+            "node string, degree long",
+        )
+    edges = _peel(graph.edges.select("src", "dst").localCheckpoint(eager=True), k, max_iter)
     return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
 def _kosaraju_pdf(pdf):
     """Single-task Kosaraju SCC kernel over one pandas (src, dst) edge
     list.  Component label = lexicographic min member id."""
+    import numpy as np
     import pandas as pd
 
-    nodes, src, dst = _factorize_edges(pdf)
+    nodes, src, dst = _factorize_edges(pdf, sort=True)
     n = len(nodes)
     fwd: list[list[int]] = [[] for _ in range(n)]
     rev: list[list[int]] = [[] for _ in range(n)]
@@ -1333,52 +1099,9 @@ def _kosaraju_pdf(pdf):
                 if comp[v] == -1:
                     comp[v] = s
                     stack2.append(v)
-    groups: dict[int, list[int]] = {}
-    for i, c in enumerate(comp):
-        groups.setdefault(c, []).append(i)
-    label = {}
-    for members in groups.values():
-        rep = min(nodes[m] for m in members)
-        for m in members:
-            label[m] = rep
-    return pd.DataFrame({"node": list(nodes), "component": [label[i] for i in range(n)]})
-
-
-def _scc_reach(ein: DataFrame, pivots: DataFrame, max_inner: int, reverse: bool) -> DataFrame:
-    """Multi-source reachability from each partition's pivot, constrained
-    to that partition's (same-part) edges.  One frontier loop covers ALL
-    partitions simultaneously — state is keyed (part, node), so the
-    superstep count is the max BFS depth over partitions, not the sum.
-    `reverse=True` walks edges backward.  Returns (part, node).
-
-    `max_inner` is a superstep HORIZON, not a convergence proof: a
-    partition whose diameter exceeds it yields an incomplete reach set
-    (and thus over-split SCCs).  The default (60) covers the measured
-    synthetic/fixture graphs; graphs suspected of >60-hop directed
-    diameters should raise max_iter on strongly_connected_components
-    or use the local Kosaraju route."""
-    a, b = ("dst", "src") if reverse else ("src", "dst")
-    visited = pivots.select("part", "node").localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(max_inner):
-        # frontier/visited are |V|-bounded state; broadcast them so the
-        # (checkpointed, stationary) edge frame never re-shuffles per
-        # superstep — the bfs_distances layout.  Remaining superstep
-        # cost is the frontier-dedup combine (distinct), which is
-        # map-side partial; measured 35.4 s -> 32.5 s on the 5M-edge
-        # bench graph (the dedup shuffle, not the join, dominates)
-        nxt = (
-            ein.join(F.broadcast(frontier.withColumnRenamed("node", a)), ["part", a])
-            .select("part", F.col(b).alias("node"))
-            .distinct()
-        )
-        frontier = nxt.join(
-            F.broadcast(visited), ["part", "node"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if not frontier.take(1):
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
+    # codes follow the id order, so the min member code is the min id
+    rep = pd.Series(np.arange(n)).groupby(np.asarray(comp)).transform("min").to_numpy()
+    return pd.DataFrame({"node": nodes, "component": nodes[rep]})
 
 
 def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFrame:
@@ -1402,12 +1125,7 @@ def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFram
     (by-then small) residue is finished by the single-task kernel."""
     spark = graph.edges.sparkSession
     e = graph.edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    part = nodes.select("node", F.lit("r").alias("part")).localCheckpoint(eager=True)
+    part = _node_set(e).select("node", F.lit("r").alias("part")).localCheckpoint(eager=True)
     act = e
     assigned: list[DataFrame] = []
 
@@ -1454,8 +1172,11 @@ def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFram
             break
         # -- pivot per partition + simultaneous FW / BW reach
         pivots = part.groupBy("part").agg(F.min("node").alias("node")).localCheckpoint(eager=True)
-        reach_f = _scc_reach(ein, pivots, max_inner, reverse=False)
-        reach_b = _scc_reach(ein, pivots, max_inner, reverse=True)
+        # a partition whose diameter exceeds max_inner yields an
+        # incomplete reach set (over-split SCCs): raise max_inner, or use
+        # the local Kosaraju route, on graphs with deeper directed paths
+        reach_f = _frontier_reach(ein, pivots, max_inner, keys=("part",))
+        reach_b = _frontier_reach(ein, pivots, max_inner, keys=("part",), reverse=True)
         scc = reach_f.join(reach_b, ["part", "node"]).localCheckpoint(eager=True)
         assigned.append(
             scc.join(pivots.select("part", F.col("node").alias("component")), "part").select(
@@ -1491,10 +1212,7 @@ def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFram
         assigned.append(leftover)
     if not assigned:
         return spark.createDataFrame([], "node string, component string")
-    out = assigned[0]
-    for df in assigned[1:]:
-        out = out.unionByName(df)
-    return out
+    return reduce(DataFrame.unionByName, assigned)
 
 
 def _local_coreness_pdf(pdf, max_k: int):
@@ -1506,21 +1224,12 @@ def _local_coreness_pdf(pdf, max_k: int):
 
     nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
-    src = np.asarray(src)
-    dst = np.asarray(dst)
     alive = np.ones(len(src), dtype=bool)
     core = np.zeros(n, dtype="int64")
     k = 1
     while alive.any() and k <= max_k:
-        while True:
-            deg = np.bincount(src[alive], minlength=n)
-            keep = deg >= k
-            new_alive = alive & keep[src] & keep[dst]
-            if int(new_alive.sum()) == int(alive.sum()):
-                break
-            alive = new_alive
-        deg = np.bincount(src[alive], minlength=n)
-        core[deg > 0] = k
+        alive = _local_peel(src, dst, n, alive, k)
+        core[np.bincount(src[alive], minlength=n) > 0] = k
         k += 1
     mask = core > 0
     return pd.DataFrame({"node": nodes[mask], "coreness": core[mask]})
@@ -1543,9 +1252,7 @@ def core_decomposition(
     graphs (the quantity itself is the output).  Small graphs
     auto-route to the numpy kernel; both paths are parity-tested
     against an independent Batagelj-Zaversnik min-degree peel."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(
             graph, lambda pdf: _local_coreness_pdf(pdf, max_k), "node string, coreness long"
         )
@@ -1554,28 +1261,13 @@ def core_decomposition(
     levels: list[DataFrame] = []
     k = 1
     while k <= max_k and edges.take(1):
-        while True:
-            deg = edges.groupBy(F.col("src").alias("node")).agg(
-                F.count(F.lit(1)).alias("degree")
-            )
-            keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(eager=True)
-            n_before = edges.count()
-            kb = F.broadcast(keep)
-            edges = (
-                edges.join(kb, edges.src == kb.node, "left_semi")
-                .join(kb, edges.dst == kb.node, "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            if edges.count() == n_before:
-                break
+        edges = _peel(edges, k)
         survivors = edges.select(F.col("src").alias("node")).distinct()
         levels.append(survivors.withColumn("coreness", F.lit(k).cast("long")))
         k += 1
     if not levels:
         return spark.createDataFrame([], "node string, coreness long")
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
+    out = reduce(DataFrame.unionByName, levels)
     return out.groupBy("node").agg(F.max("coreness").alias("coreness"))
 
 
@@ -1590,72 +1282,44 @@ def strongly_connected_components(
     distributed FW-BW-Trim decomposition (:func:`_scc_fwbw`) runs.
     Returns DataFrame(node, component) with component = lexicographic
     min member id on both paths (parity-tested)."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(graph, _kosaraju_pdf, "node string, component string")
     return _scc_fwbw(graph, max_rounds, max_inner)
 
 
 def label_propagation(
-    graph: PropertyGraph,
-    max_iter: int = 10,
-    local: bool | None = None,
-    broadcast_state: bool | None = None,
+    graph: PropertyGraph, max_iter: int = 10, local: bool | None = None
 ) -> DataFrame:
     """Community detection: each node adopts the most frequent label of
     its in-neighbors each round (ties -> smallest label).  Deterministic
     synchronous variant, hash-declared (g15); small graphs auto-route to
-    the numpy kernel.  broadcast_state follows the shared Pregel layout
-    rule (:func:`_attach_contributions`): above
-    VERTEX_STATE_BROADCAST_LIMIT vertices the label vector joins an
-    src-partitioned edge copy instead of broadcasting."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
-        return _run_local(
-            graph, lambda pdf: _local_lp_pdf(pdf, max_iter), "node string, label string"
-        )
-    spark = graph.edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
-    )
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    state = (
-        nodes.select("node", F.col("node").alias("label"))
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(max_iter):
-        counts = (
-            _attach_contributions(edges, state.withColumnRenamed("node", "src"), bcast)
-            .groupBy(F.col("dst").alias("node"), F.col("label"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        from pyspark.sql import Window
+    the numpy kernel.  Distributed it is a :func:`_vertex_supersteps`
+    spec: the label vector is the superstep's contribution, the combine
+    a per-(node, label) count plus a row_number argmax."""
+    schema = "node string, label string"
+    if _is_local(graph, local):
+        return _run_local(graph, lambda pdf: _local_lp_pdf(pdf, max_iter), schema)
 
+    def combine(att):
+        counts = att.groupBy(F.col("dst").alias("node"), F.col("label")).agg(
+            F.count(F.lit(1)).alias("c")
+        )
         w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label").asc())
-        best = counts.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select(
+        return counts.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select(
             F.col("node").alias("bnode"), F.col("label").alias("best_label")
         )
-        state = (
-            state.join(best, state.node == F.col("bnode"), "left")
-            .select("node", F.coalesce(F.col("best_label"), F.col("label")).alias("label"))
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state
+
+    return _vertex_supersteps(
+        graph.edges.select("src", "dst"),
+        init=lambda nodes, nv: nodes.select("node", F.col("node").alias("label")),
+        message=lambda state: state.withColumnRenamed("node", "src"),
+        combine=combine,
+        update=lambda state, best: state.join(best, state.node == F.col("bnode"), "left").select(
+            "node", F.coalesce(F.col("best_label"), F.col("label")).alias("label")
+        ),
+        iterations=max_iter,
+        schema=schema,
+    )
 
 
 def node_similarity_jaccard(
@@ -1865,22 +1529,27 @@ def earliest_arrival(
             .localCheckpoint(eager=True)
         )
         found.append(frontier)
-    allf = found[0]
-    for f in found[1:]:
-        allf = allf.unionByName(f)
-    return allf.groupBy("node").agg(F.min("t").alias("arrival_ts"))
+    return reduce(DataFrame.unionByName, found).groupBy("node").agg(F.min("t").alias("arrival_ts"))
 
 
-def _brandes_partial(nodes, src, dst, source_ids):
+def _brandes_partial(pdf, sources):
     """Vectorized Brandes dependency accumulation for one batch of
-    sources over a symmetric (undirected) edge array.  Per source: a
+    `sources` (every node when None; absent ones are skipped) over a
+    symmetric (undirected) pandas edge list.  Per source: a
     level-synchronous BFS computing shortest-path counts sigma, then a
     backward per-level sweep accumulating dependencies — every step is
     an edge-array mask + np.add.at, no per-node Python loops.  Returns
-    the UNSCALED dependency sum (pair-double-counting not yet halved)."""
+    (nodes, the UNSCALED dependency sum — pair-double-counting not yet
+    halved)."""
     import numpy as np
+    import pandas as pd
 
+    nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
+    if sources is None:
+        source_ids = range(n)
+    else:
+        source_ids = [i for i in pd.Index(nodes).get_indexer(list(sources)) if i >= 0]
     bc = np.zeros(n, dtype="float64")
     for s in source_ids:
         dist = np.full(n, -1, dtype="int64")
@@ -1910,21 +1579,15 @@ def _brandes_partial(nodes, src, dst, source_ids):
             np.add.at(delta, ms, (sigma[ms] / sigma[md]) * (1.0 + delta[md]))
         delta[s] = 0.0
         bc += delta
-    return bc
+    return nodes, bc
 
 
 def _local_betweenness_pdf(pdf, sources, normalized: bool):
-    import numpy as np
     import pandas as pd
 
-    nodes, src, dst = _factorize_edges(pdf)
+    nodes, bc = _brandes_partial(pdf, sources)
+    bc = bc / 2.0
     n = len(nodes)
-    if sources is None:
-        source_ids = range(n)
-    else:
-        idx = {v: i for i, v in enumerate(nodes)}
-        source_ids = [idx[s] for s in sources if s in idx]
-    bc = _brandes_partial(nodes, src, dst, source_ids) / 2.0
     if normalized and n > 2:
         bc /= (n - 1) * (n - 2) / 2.0
     return pd.DataFrame({"node": nodes, "bc": bc})
@@ -1956,9 +1619,7 @@ def betweenness_centrality(
     source (V supersteps per source) — at that point sampled landmark
     closeness (g22) is the honest substitute, not exact betweenness.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _is_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_betweenness_pdf(pdf, sources, normalized),
@@ -1984,14 +1645,7 @@ def betweenness_centrality(
     # local kernel's _factorize_edges sees — graph.vertices.count()
     # would diverge 6x on a 10-vertex/5-endpoint graph purely by which
     # auto-route fired; skipped entirely when not normalizing
-    n_total = (
-        graph.edges.select(F.col("src").alias("id"))
-        .unionByName(graph.edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .count()
-        if normalized
-        else 0
-    )
+    n_total = _node_set(graph.edges).count() if normalized else 0
     src_df = spark.createDataFrame(
         [(s,) for s in sources], ["source"]
     ).repartition(min(source_batches, max(1, len(sources))))
@@ -2004,11 +1658,7 @@ def betweenness_centrality(
             batch_sources.extend(b["source"].tolist())
         if not batch_sources:
             return
-        pdf = b_edges.value
-        nodes, srca, dsta = _factorize_edges(pdf)
-        idx = {v: i for i, v in enumerate(nodes)}
-        ids = [idx[s] for s in batch_sources if s in idx]
-        part = _brandes_partial(nodes, srca, dsta, ids)
+        nodes, part = _brandes_partial(b_edges.value, batch_sources)
         yield _pd.DataFrame({"node": nodes, "bc": part})
 
     partial = src_df.mapInPandas(run, schema="node string, bc double")

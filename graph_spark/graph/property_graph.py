@@ -1,27 +1,29 @@
-"""DataFrame-native property graph with a Pregel-style iteration core.
+"""DataFrame-native property graph: the vertex and edge frames every
+graph algorithm runs over.
 
 Capability parity target: the graph/traversal surface of the reference
 temporal-graph system (SURVEY.md §2.C) — degree, k-hop, BFS, connected
 components, PageRank, triangles, time-respecting traversal — rebuilt on
 Spark DataFrames (GraphX has no Python API and GraphFrames is absent).
 
-Scale design (the part that matters at 100 TB):
-- Edges are the big table and they NEVER move after an optional initial
-  repartition: each superstep broadcasts the (small) vertex-state frame
-  to the edge partitions, aggregates messages by dst, and joins back.
-  With |V| << |E| (the common case) this makes a superstep one shuffle
-  (the groupBy(dst) message combine) instead of three.
-- When vertex state outgrows broadcast (huge V), set broadcast_state=False
-  and the same code degrades to shuffle joins; pre-partitioning edges and
-  state on the same key keeps those joins co-located.
-- Lineage is truncated with localCheckpoint every `checkpoint_every`
-  supersteps — unbounded iterative lineage is THE failure mode of
-  DataFrame loops (re-plan cost grows superlinearly).
+Scale design (the part that matters at 100 TB) lives in
+`algorithms.py`, which routes every kernel through one rule
+(`_is_local`: numpy kernel below LOCAL_EDGE_THRESHOLD edges) and runs
+the vertex-state kernels on one superstep driver
+(`_vertex_supersteps`):
+- Edges are the big table and they NEVER move after one initial
+  repartition: each superstep joins the (small) vertex-state messages
+  onto the edge partitions and combines them by dst, so a superstep is
+  one shuffle (the groupBy(dst) message combine) instead of three.
+- The driver picks the layout from |V|: broadcast state while it fits
+  (VERTEX_STATE_BROADCAST_LIMIT), else state and an src-partitioned
+  edge copy co-partitioned on node, so the joins stay co-located.
+- Lineage is truncated with one localCheckpoint per superstep —
+  unbounded iterative lineage is THE failure mode of DataFrame loops
+  (re-plan cost grows superlinearly).
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,51 +42,6 @@ class PropertyGraph:
         self.vertices = vertices
         self.edges = edges
 
-    # ---- core primitive -------------------------------------------------
-
-    def aggregate_messages(
-        self,
-        state: DataFrame,
-        msg_expr,
-        agg_exprs,
-        broadcast_state: bool = True,
-    ) -> DataFrame:
-        """One message round: join vertex `state` (id, ...) onto edge
-        sources, emit `msg_expr` per edge, combine per dst with
-        `agg_exprs` (list of aggregate Columns).
-
-        Returns DataFrame(id, <agg columns>).  Map-side combine happens
-        automatically in the groupBy (partial aggregation before the
-        shuffle), so the shuffle carries combined partials, not raw
-        messages.
-        """
-        st = F.broadcast(state) if broadcast_state else state
-        joined = self.edges.join(st, self.edges.src == st.id, "inner")
-        msgs = joined.select(F.col("dst").alias("id"), msg_expr.alias("msg"))
-        return msgs.groupBy("id").agg(*agg_exprs)
-
-    def pregel(
-        self,
-        initial_state: DataFrame,
-        step: Callable[["PropertyGraph", DataFrame, int], DataFrame],
-        max_iter: int,
-        converged: Callable[[DataFrame, DataFrame], bool] | None = None,
-        checkpoint_every: int = 1,
-    ) -> DataFrame:
-        """Generic superstep loop.  `step(graph, state, i)` returns the
-        next state; `converged(prev, new)` (optional) stops early — it is
-        the only driver-side action per iteration, so convergence checks
-        cost exactly one job."""
-        state = initial_state.localCheckpoint(eager=True)
-        for i in range(max_iter):
-            new_state = step(self, state, i)
-            if (i + 1) % checkpoint_every == 0 or converged is not None:
-                new_state = new_state.localCheckpoint(eager=True)
-            if converged is not None and converged(state, new_state):
-                return new_state
-            state = new_state
-        return state
-
     # ---- views ----------------------------------------------------------
 
     def subgraph(self, vertex_pred=None, edge_pred=None) -> "PropertyGraph":
@@ -102,11 +59,3 @@ class PropertyGraph:
             ).join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
             e = e.select(*self.edges.columns)
         return PropertyGraph(v, e)
-
-    # ---- degree helpers -------------------------------------------------
-
-    def out_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("out_degree"))
-
-    def in_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).alias("in_degree"))

@@ -58,19 +58,6 @@ def to_media_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def decode_image(payload: bytes) -> object:
-    """STUB: real image decode requires PIL/libvips, absent here."""
-    raise NotImplementedError("image codec libraries not available in this container")
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """STUB: real resize requires an image library, absent here.  The
-    Spark-side call shape is `df.withColumn("resized", resize_udf(...))`
-    over the pruned (id, payload) projection, identical to
-    `extract_features`."""
-    raise NotImplementedError("image codec libraries not available in this container")
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

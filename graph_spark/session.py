@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import warnings
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -32,17 +33,17 @@ def _ship_package(spark: SparkSession) -> None:
     which cloudpickle serializes BY REFERENCE — workers must be able to
     `import graph_spark`.  That holds when the driver's cwd is the repo
     root but breaks from any other cwd (and on a real cluster), so ship
-    the package as a zip once per session."""
+    the package as a zip once per session.  A failed ship warns (naming
+    the zip and the error) instead of surfacing later as a worker-side
+    ImportError; driver-side imports keep working either way."""
+    import graph_spark
+
     key = id(spark)
     if key in _SHIPPED:
         return
+    pkg_dir = os.path.dirname(os.path.abspath(graph_spark.__file__))
+    zip_path = os.path.join(tempfile.gettempdir(), f"graph_spark_pkg_{os.getpid()}_{key}.zip")
     try:
-        import graph_spark
-
-        pkg_dir = os.path.dirname(os.path.abspath(graph_spark.__file__))
-        zip_path = os.path.join(
-            tempfile.gettempdir(), f"graph_spark_pkg_{os.getpid()}_{key}.zip"
-        )
         if not os.path.exists(zip_path):
             with zipfile.ZipFile(zip_path, "w") as z:
                 for root, _, files in os.walk(pkg_dir):
@@ -53,8 +54,13 @@ def _ship_package(spark: SparkSession) -> None:
                             z.write(full, rel)
         spark.sparkContext.addPyFile(zip_path)
         _SHIPPED.add(key)
-    except Exception:
-        pass  # driver-side import still works; only worker closures affected
+    except Exception as exc:
+        warnings.warn(
+            f"graph_spark could not ship its package zip {zip_path} to the executors "
+            f"({exc!r}); python workers that import graph_spark may fail",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def default_parallelism() -> int:
@@ -96,13 +102,8 @@ def get_spark(app_name: str = "graph-spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # the runtime confs (timezone, nanosAsLong, shuffle partitions,
+        # AQE, Arrow) are set once, by configure() below
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # spark.driver.maxResultSize stays at its 1g default: the only

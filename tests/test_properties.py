@@ -9,6 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from graph_spark.graph import algorithms as alg
 from graph_spark.graph.algorithms import bfs_distances, connected_components
 from graph_spark.graph.property_graph import PropertyGraph
 
@@ -21,11 +22,13 @@ SEEDS = [
     pytest.param(1337, marks=pytest.mark.nightly),
 ]
 
-# (local, broadcast_state) triples exercising every Pregel execution
-# path: single-task numpy kernel, distributed broadcast-state
-# superstep, and the >VERTEX_STATE_BROADCAST_LIMIT shuffle-state
-# superstep (dual edge layout, nothing |V|-sized broadcast).
-PREGEL_MODES = [(True, None), (False, True), (False, False)]
+# (local, VERTEX_STATE_BROADCAST_LIMIT) pairs exercising every Pregel
+# execution path: single-task numpy kernel, distributed broadcast-state
+# superstep (the default limit), and the shuffle-state superstep (dual
+# edge layout, nothing |V|-sized broadcast) that a limit of 0 forces.
+# Each loop iteration monkeypatches the limit to its mode's value.
+STATE_LIMIT = alg.VERTEX_STATE_BROADCAST_LIMIT
+PREGEL_MODES = [(True, STATE_LIMIT), (False, STATE_LIMIT), (False, 0)]
 
 
 def _random_graph(seed: int, n_nodes: int = 60, n_edges: int = 120):
@@ -91,17 +94,15 @@ def test_bfs_matches_python_reference(spark, seed):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_cc_matches_union_find(spark, seed):
+def test_cc_matches_union_find(spark, seed, monkeypatch):
     edges = _random_graph(seed)
     edf = spark.createDataFrame(edges, ["src", "dst"])
     g = PropertyGraph(edf.select(F.col("src").alias("id")).distinct(), edf)
     want = _py_cc(edges)
-    for local, bstate in PREGEL_MODES:
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(g, local=local, broadcast_state=bstate).collect()
-        }
-        assert got == want, f"local={local} bstate={bstate} seed={seed}"
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        got = {r["node"]: r["component"] for r in connected_components(g, local=local).collect()}
+        assert got == want, f"local={local} limit={limit} seed={seed}"
 
 
 @pytest.mark.parametrize("seed", SEEDS)
@@ -208,7 +209,7 @@ def test_kcore_local_distributed_reference_parity(spark, seed):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_label_propagation_local_distributed_parity(spark, seed):
+def test_label_propagation_local_distributed_parity(spark, seed, monkeypatch):
     from graph_spark.graph.algorithms import label_propagation
 
     edges = _random_graph(seed)
@@ -216,12 +217,10 @@ def test_label_propagation_local_distributed_parity(spark, seed):
     v = e.select(F.col("src").alias("id")).distinct()
     g = PropertyGraph(v, e)
     a = {r["node"]: r["label"] for r in label_propagation(g, 4, local=True).collect()}
-    for bstate in (True, False):
-        b = {
-            r["node"]: r["label"]
-            for r in label_propagation(g, 4, local=False, broadcast_state=bstate).collect()
-        }
-        assert a == b, f"seed={seed} bstate={bstate}"
+    for limit in (STATE_LIMIT, 0):
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        b = {r["node"]: r["label"] for r in label_propagation(g, 4, local=False).collect()}
+        assert a == b, f"seed={seed} limit={limit}"
 
 
 def _py_ppr(edges, sources, iters, damping):
@@ -245,7 +244,7 @@ def _py_ppr(edges, sources, iters, damping):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_personalized_pagerank_local_distributed_reference_parity(spark, seed):
+def test_personalized_pagerank_local_distributed_reference_parity(spark, seed, monkeypatch):
     from graph_spark.graph.algorithms import personalized_pagerank
 
     edges = _random_graph(seed)
@@ -254,16 +253,15 @@ def test_personalized_pagerank_local_distributed_reference_parity(spark, seed):
     e = spark.createDataFrame(edges, ["src", "dst"])
     v = e.select(F.col("src").alias("id")).distinct()
     g = PropertyGraph(v, e)
-    for local, bstate in PREGEL_MODES:
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
         got = {
             r["node"]: r["rank"]
-            for r in personalized_pagerank(
-                g, sources, 5, local=local, broadcast_state=bstate
-            ).collect()
+            for r in personalized_pagerank(g, sources, 5, local=local).collect()
         }
-        assert got.keys() == want.keys(), f"local={local} bstate={bstate} seed={seed}"
+        assert got.keys() == want.keys(), f"local={local} limit={limit} seed={seed}"
         for n in want:
-            assert abs(got[n] - want[n]) < 1e-9, f"local={local} bstate={bstate} node={n}"
+            assert abs(got[n] - want[n]) < 1e-9, f"local={local} limit={limit} node={n}"
 
 
 @pytest.mark.parametrize("seed", SEEDS)
@@ -427,7 +425,7 @@ def _py_weighted_pr(edges_w, iterations, damping):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_weighted_pagerank_local_distributed_reference_parity(spark, seed):
+def test_weighted_pagerank_local_distributed_reference_parity(spark, seed, monkeypatch):
     from graph_spark.graph.algorithms import pagerank_weighted
 
     rng = random.Random(seed)
@@ -436,14 +434,12 @@ def test_weighted_pagerank_local_distributed_reference_parity(spark, seed):
     e = spark.createDataFrame(edges_w, ["src", "dst", "weight"])
     v = e.select(F.col("src").alias("id")).distinct()
     g = PropertyGraph(v, e)
-    for local, bstate in PREGEL_MODES:
-        got = {
-            r["node"]: r["rank"]
-            for r in pagerank_weighted(g, 5, local=local, broadcast_state=bstate).collect()
-        }
-        assert got.keys() == want.keys(), f"local={local} bstate={bstate} seed={seed}"
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        got = {r["node"]: r["rank"] for r in pagerank_weighted(g, 5, local=local).collect()}
+        assert got.keys() == want.keys(), f"local={local} limit={limit} seed={seed}"
         for n in want:
-            assert abs(got[n] - want[n]) < 1e-9, f"local={local} bstate={bstate} node={n}"
+            assert abs(got[n] - want[n]) < 1e-9, f"local={local} limit={limit} node={n}"
 
 
 def _py_betweenness(edges):
@@ -836,7 +832,7 @@ def test_largest_remainder_sums_to_budget(spark, seed):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_katz_local_distributed_reference_parity(spark, seed):
+def test_katz_local_distributed_reference_parity(spark, seed, monkeypatch):
     """katz_centrality == plain-python truncated Katz on random sparse
     graphs, on both execution paths."""
     from graph_spark.graph.algorithms import katz_centrality
@@ -853,16 +849,15 @@ def test_katz_local_distributed_reference_parity(spark, seed):
     e = spark.createDataFrame(edges, ["src", "dst"])
     v = e.select(F.col("src").alias("id")).distinct()
     g = PropertyGraph(v, e)
-    for local, bstate in PREGEL_MODES:
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
         got = {
             r["node"]: r["katz"]
-            for r in katz_centrality(
-                g, iterations=iters, alpha=alpha, local=local, broadcast_state=bstate
-            ).collect()
+            for r in katz_centrality(g, iterations=iters, alpha=alpha, local=local).collect()
         }
-        assert got.keys() == x.keys(), f"local={local} bstate={bstate} seed={seed}"
+        assert got.keys() == x.keys(), f"local={local} limit={limit} seed={seed}"
         for n in x:
-            assert abs(got[n] - x[n]) < 1e-9, f"local={local} bstate={bstate} node={n}"
+            assert abs(got[n] - x[n]) < 1e-9, f"local={local} limit={limit} node={n}"
 
 
 @pytest.mark.parametrize("seed", SEEDS)
@@ -957,31 +952,50 @@ def _py_pagerank(edges, iters, damping):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_pagerank_all_modes_reference_parity(spark, seed):
+def test_pagerank_all_modes_reference_parity(spark, seed, monkeypatch):
     """pagerank == plain-python reference on all three execution paths,
-    including the shuffle-state superstep (broadcast_state=False)."""
+    including the shuffle-state superstep (VERTEX_STATE_BROADCAST_LIMIT
+    forced to 0)."""
     from graph_spark.graph.algorithms import pagerank
 
     edges = _random_graph(seed)
     want = _py_pagerank(edges, 5, 0.85)
     e = spark.createDataFrame(edges, ["src", "dst"])
     g = PropertyGraph(e.select(F.col("src").alias("id")).distinct(), e)
-    for local, bstate in PREGEL_MODES:
-        got = {
-            r["node"]: r["rank"]
-            for r in pagerank(g, 5, local=local, broadcast_state=bstate).collect()
-        }
-        assert got.keys() == want.keys(), f"local={local} bstate={bstate} seed={seed}"
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        got = {r["node"]: r["rank"] for r in pagerank(g, 5, local=local).collect()}
+        assert got.keys() == want.keys(), f"local={local} limit={limit} seed={seed}"
         for n in want:
-            assert abs(got[n] - want[n]) < 1e-9, f"local={local} bstate={bstate} node={n}"
+            assert abs(got[n] - want[n]) < 1e-9, f"local={local} limit={limit} node={n}"
+
+
+def test_rank_variants_agree_in_all_modes(spark, monkeypatch):
+    """The three PageRanks are one rank propagation: pagerank ==
+    personalized_pagerank seeded on every node == pagerank_weighted
+    over unit weights, to 1e-12, on all three execution paths."""
+    edges = _random_graph(5)
+    e = spark.createDataFrame([(a, b, 1.0) for a, b in edges], ["src", "dst", "weight"])
+    g = PropertyGraph(e.select(F.col("src").alias("id")).distinct(), e)
+    nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        runs = [
+            alg.pagerank(g, 6, local=local),
+            alg.personalized_pagerank(g, nodes, 6, local=local),
+            alg.pagerank_weighted(g, 6, local=local),
+        ]
+        plain, ppr, weighted = ({r["node"]: r["rank"] for r in df.collect()} for df in runs)
+        assert plain.keys() == ppr.keys() == weighted.keys() == set(nodes)
+        for n in nodes:
+            assert abs(plain[n] - ppr[n]) < 1e-12, f"local={local} limit={limit} node={n}"
+            assert abs(plain[n] - weighted[n]) < 1e-12, f"local={local} limit={limit} node={n}"
 
 
 def test_pregel_auto_routes_to_shuffle_state(spark, monkeypatch):
-    """With VERTEX_STATE_BROADCAST_LIMIT forced to 0, broadcast_state=None
+    """With VERTEX_STATE_BROADCAST_LIMIT forced to 0, the superstep driver
     must auto-pick the shuffle-state layout and still match the numpy
     kernel — the guard that the >limit routing is both wired and correct."""
-    from graph_spark.graph import algorithms as alg
-
     monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", 0)
     edges = _random_graph(11)
     e = spark.createDataFrame(edges, ["src", "dst"])
