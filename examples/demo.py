@@ -95,7 +95,7 @@ def main() -> None:
     print("== graph: delta-stepping SSSP (bucketed weighted distances) ==")
     eng.shortest_paths_delta_stepping("c1", delta=4.0).orderBy("dist", "node").show(5)
 
-    print("== graph: strongly connected components (FW-BW above 5M edges) ==")
+    print("== graph: strongly connected components (Min-Label rounds above 5M edges) ==")
     eng.strongly_connected_components().groupBy("component").count().orderBy(
         F.desc("count")
     ).show(3)

@@ -7,6 +7,7 @@ Dijkstra) round only at the output edge, as declared.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import weakref
 from functools import reduce
@@ -53,14 +54,49 @@ def _attach_contributions(edges: DataFrame, contrib: DataFrame, broadcast: bool)
     dst-partitioned edges, so the following dst combine needs no
     exchange — the whole superstep costs zero shuffles of |E| data.
     broadcast=False (the >VERTEX_STATE_BROADCAST_LIMIT path): contrib
-    arrives hash-partitioned on node==src (state is pre-partitioned on
-    node and Spark's projections are alias-aware), edges are
+    arrives hash-partitioned on node==src when the state was
+    checkpointed by :func:`_checkpoint` (which keeps the node
+    partitioning; Spark's projections are alias-aware), edges are
     pre-partitioned on src with the same partition count, so the join
     is a zero-exchange sort-merge join; the dst combine is then the
     superstep's single (map-side combined) shuffle.
     """
     rhs = F.broadcast(contrib) if broadcast else contrib
     return edges.join(rhs, "src")
+
+
+@contextlib.contextmanager
+def _static_plans(spark):
+    """Plan the actions run inside without AQE (restored after).
+
+    Under AQE every shuffle stage is its own job, and the executed
+    plan's root (AdaptiveSparkPlanExec) reports UnknownPartitioning, so
+    a checkpoint of superstep state would forget that it is
+    hash-partitioned on node and every later join on node would
+    re-shuffle it.  Superstep plans have no skew join to split and a
+    fixed partition count; what they give up is AQE's runtime switch of
+    a sort-merge join to a broadcast join.  The switch is session-wide
+    while the block runs."""
+    conf = spark.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint planned by :func:`_static_plans`: one job
+    (plus one per broadcast in the plan), and the checkpoint keeps
+    `df`'s output partitioning."""
+    with _static_plans(df.sparkSession):
+        return df.localCheckpoint(eager=True)
+
+
+class NotConvergedError(RuntimeError):
+    """A fixpoint superstep loop still had changing vertices when it hit
+    its superstep cap; its labels would be silently wrong."""
 
 
 def _node_set(edges: DataFrame) -> DataFrame:
@@ -94,32 +130,44 @@ def _vertex_supersteps(
     - ``update(state, combined)``: the next state;
     - ``delta(state)`` (optional): the vertices that send next
       superstep; the loop halts once it is empty (one ``take(1)``).
+      A delta loop is a fixpoint: if the delta is still non-empty after
+      `iterations` supersteps it raises :class:`NotConvergedError`
+      instead of returning labels that have not converged.
 
     The driver owns the rest: the edge pre-partition (dst for
     broadcast-state while |V| <= VERTEX_STATE_BROADCAST_LIMIT, else src
     for shuffle-state), node-partitioned state checkpointed once per
-    superstep, and unpersisting.  No edges gives an empty `schema`
-    frame.  Returns the final state, all columns.
+    superstep by :func:`_checkpoint` (so no superstep re-shuffles it),
+    and unpersisting.  No edges gives an empty `schema` frame.  Returns
+    the final state, all columns.
     """
     spark = edges.sparkSession
-    nodes = _node_set(edges).persist()  # read twice: the |V| count and the state init
-    nv = nodes.count()
+    nodes = _checkpoint(_node_set(edges))  # read twice: the |V| count and the state init
+    with _static_plans(spark):
+        nv = nodes.count()
     if nv == 0:
-        nodes.unpersist()
         return spark.createDataFrame([], schema)
     bcast = nv <= VERTEX_STATE_BROADCAST_LIMIT
     n_part = spark.sparkContext.defaultParallelism
     edges = edges.repartition(n_part, "dst" if bcast else "src").persist()
-    state = init(nodes, nv).repartition(n_part, "node").localCheckpoint(eager=True)
-    nodes.unpersist()
-    active = state
-    for _ in range(iterations):
-        msgs = combine(_attach_contributions(edges, message(active), bcast))
-        state = update(state, msgs).localCheckpoint(eager=True)
-        active = state if delta is None else delta(state)
-        if delta is not None and not active.take(1):
-            break
-    edges.unpersist()
+    try:
+        state = _checkpoint(init(nodes, nv).repartition(n_part, "node"))
+        active = state
+        for _ in range(iterations):
+            msgs = combine(_attach_contributions(edges, message(active), bcast))
+            state = _checkpoint(update(state, msgs))
+            if delta is None:
+                active = state
+            elif not (active := delta(state)).take(1):
+                break
+        else:
+            if delta is not None:
+                raise NotConvergedError(
+                    f"vertices still changing after {iterations} supersteps "
+                    f"on a graph of {nv} vertices"
+                )
+    finally:
+        edges.unpersist()
     return state
 
 
@@ -347,38 +395,35 @@ def _run_local(
 
 
 def _frontier_reach(
-    edges: DataFrame, seeds: DataFrame, max_hops: int, keys: tuple = (), reverse: bool = False
+    edges: DataFrame, seeds: DataFrame, max_hops: int, keys: tuple = ()
 ) -> DataFrame:
-    """The ONE frontier loop behind bfs_distances, multi_source_bfs and
-    the SCC reach: expand `seeds` (*keys, node, optional d) hop by hop
-    along `edges` (backward when `reverse`), subtracting the visited
-    pairs.  State is keyed (*keys, node) — `lm` for landmarks, `part`
-    for SCC partitions; a key the edges also carry restricts each hop
-    to its own edges — so many sources cost the supersteps of the
-    deepest one.  Seeds with `d` get the hop number as `d`.  Frontier
-    and visited (|V|-bounded) are broadcast so the edges never
-    re-shuffle.  `max_hops` is a horizon, not a convergence proof.
-    Returns the visited frame, seeds included."""
-    a, b = ("dst", "src") if reverse else ("src", "dst")
+    """The ONE frontier loop behind bfs_distances and multi_source_bfs:
+    expand `seeds` (*keys, node, optional d) hop by hop along `edges`,
+    subtracting the visited pairs.  State is keyed (*keys, node) — `lm`
+    for landmarks — so many sources cost the supersteps of the deepest
+    one.  Seeds with `d` get the hop number as `d`.  The frontier is
+    broadcast onto the edges, so the edges never re-shuffle; visited is
+    the union of the per-hop checkpointed frontiers (no checkpoint of
+    its own), anti-joined by a shuffle join on the (*keys, node)
+    distinct, so nothing |V|-sized is broadcast and a hop costs one
+    broadcast job, one checkpoint job and the halt probe.  `max_hops`
+    is a horizon, not a convergence proof.  Returns the visited frame,
+    seeds included."""
     keys = list(keys)
-    on = [k for k in keys if k in edges.columns] + [a]
-    visited = seeds.localCheckpoint(eager=True)
-    frontier = visited
+    as_src = [*keys, F.col("node").alias("src")]  # built once (see _scc_min_label)
+    as_node = [*keys, F.col("dst").alias("node")]
+    visited = frontier = _checkpoint(seeds)
     for hop in range(1, max_hops + 1):
         nxt = (
-            edges.join(F.broadcast(frontier.select(*keys, F.col("node").alias(a))), on)
-            .select(*keys, F.col(b).alias("node"))
-            .distinct()
+            edges.join(F.broadcast(frontier.select(*as_src)), "src").select(*as_node).distinct()
         )
-        frontier = nxt.join(
-            F.broadcast(visited.select(*keys, "node")), [*keys, "node"], "left_anti"
-        )
+        frontier = nxt.join(visited.select(*keys, "node"), [*keys, "node"], "left_anti")
         if "d" in seeds.columns:
             frontier = frontier.withColumn("d", F.lit(hop))
-        frontier = frontier.localCheckpoint(eager=True)
+        frontier = _checkpoint(frontier)
         if not frontier.take(1):
             break
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
+        visited = visited.unionByName(frontier)
     return visited
 
 
@@ -471,40 +516,46 @@ def connected_components(
     late rounds cost almost nothing even on diameter-bound graphs.
     Above VERTEX_STATE_BROADCAST_LIMIT vertices the delta joins the
     src-partitioned edge copy instead of being broadcast, so the first
-    rounds (delta == |V|) never broadcast the state vector.
+    rounds (delta == |V|) never broadcast the state vector.  Labels
+    still changing after `max_iter` supersteps raise
+    :class:`NotConvergedError` (diameter D needs D + 1 supersteps).
     """
     schema = "node string, component string"
     if _is_local(graph, local):
         return _run_local(graph, _local_cc_pdf, schema)
 
-    def update(state, msgs):
-        # keep old + new side by side in ONE checkpointed frame so the
-        # delta extraction is a cheap filter on it, not a second
-        # state-vs-state sort-merge join per round
-        return state.join(
-            msgs.withColumnRenamed("node", "mnode"), state.node == F.col("mnode"), "left"
-        ).select(
-            "node",
-            F.col("component").alias("old_component"),
-            F.least(
-                F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-            ).alias("component"),
+    # built once, outside the superstep loop (see _scc_min_label); old
+    # and new labels sit side by side in ONE checkpointed frame so the
+    # delta extraction is a cheap filter on it, not a second
+    # state-vs-state sort-merge join per round
+    comp = F.col("component")
+    init_cols = ["node", F.col("node").alias("component")]
+    msg_cols = [F.col("node").alias("src"), "component"]
+    by_dst = F.col("dst").alias("node")
+    nbr_min = F.min("component").alias("nbr_min")
+    upd_cols = [
+        "node",
+        comp.alias("old_component"),
+        F.least(comp, F.col("nbr_min")).alias("component"),
+    ]
+    changed = comp != F.col("old_component")
+    try:
+        state = _vertex_supersteps(
+            graph.edges.select("src", "dst"),
+            init=lambda nodes, nv: nodes.select(*init_cols),
+            message=lambda delta: delta.select(*msg_cols),
+            combine=lambda att: att.groupBy(by_dst).agg(nbr_min),
+            update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
+            iterations=max_iter,
+            schema=schema,
+            delta=lambda state: state.filter(changed).select("node", "component"),
         )
-
-    return _vertex_supersteps(
-        graph.edges.select("src", "dst"),
-        init=lambda nodes, nv: nodes.select("node", F.col("node").alias("component")),
-        message=lambda delta: delta.select(F.col("node").alias("src"), "component"),
-        combine=lambda att: att.groupBy(F.col("dst").alias("node")).agg(
-            F.min("component").alias("nbr_min")
-        ),
-        update=update,
-        iterations=max_iter,
-        schema=schema,
-        delta=lambda state: state.filter(
-            F.col("component") != F.col("old_component")
-        ).select("node", "component"),
-    ).select("node", "component")
+    except NotConvergedError as exc:
+        raise NotConvergedError(
+            f"connected_components did not converge within max_iter={max_iter}: {exc}; "
+            "raise max_iter or use local=True"
+        ) from None
+    return state.select("node", "component")
 
 
 def _rank_propagation(
@@ -536,10 +587,10 @@ def _rank_propagation(
     edges = graph.edges.select("src", "dst", *weight)
     outw = F.count(F.lit(1)) if weight_col is None else F.sum("weight")
     inflow = F.col("w") if weight_col is None else F.col("w") * F.col("weight")
-    reset = None
+    upd_cols = None  # the update's columns, which depend on |V|: set by init
 
     def init(nodes, nv):
-        nonlocal reset
+        nonlocal upd_cols
         if sources is None:
             tele = F.lit(1.0 / nv)
             reset = F.lit((1.0 - damping) / nv)
@@ -550,25 +601,24 @@ def _rank_propagation(
                 F.lit(0.0)
             )
             reset = F.lit(1.0 - damping) * tele
+        rank = reset + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))
+        upd_cols = ["node", "ws", rank.alias("rank")]
         deg = edges.groupBy(F.col("src").alias("node")).agg(outw.alias("ws"))
         return nodes.join(deg, "node", "left").select(
             "node", F.coalesce("ws", F.lit(0)).alias("ws"), tele.alias("rank")
         )
 
+    # built once, outside the superstep loop (see _scc_min_label)
+    sends = (F.col("ws") > 0) & (F.col("rank") != 0)
+    msg_cols = [F.col("node").alias("src"), (F.col("rank") / F.col("ws")).alias("w")]
+    by_dst = F.col("dst").alias("node")
+    acc = F.sum(inflow).alias("acc")
     return _vertex_supersteps(
         edges,
         init=init,
-        message=lambda state: state.filter((F.col("ws") > 0) & (F.col("rank") != 0)).select(
-            F.col("node").alias("src"), (F.col("rank") / F.col("ws")).alias("w")
-        ),
-        combine=lambda att: att.groupBy(F.col("dst").alias("node")).agg(
-            F.sum(inflow).alias("acc")
-        ),
-        update=lambda state, msgs: state.join(msgs, "node", "left").select(
-            "node",
-            "ws",
-            (reset + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("rank"),
-        ),
+        message=lambda state: state.filter(sends).select(*msg_cols),
+        combine=lambda att: att.groupBy(by_dst).agg(acc),
+        update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
         iterations=iterations,
         schema=schema,
     ).select("node", "rank")
@@ -1104,115 +1154,81 @@ def _kosaraju_pdf(pdf):
     return pd.DataFrame({"node": nodes, "component": nodes[rep]})
 
 
-def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFrame:
-    """Distributed SCC: trimming + forward-backward decomposition with a
-    pivot per partition, all partitions processed in parallel each round
-    (the FW-BW-Trim algorithm of McLendon et al.; the standard
-    distributed SCC — Kosaraju/Tarjan DFS orders don't parallelize).
+def _scc_min_label(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFrame:
+    """Distributed SCC by Min-Label rounds (Yan et al., "Pregel
+    Algorithms for Graph Connectivity Problems with Performance
+    Guarantees", VLDB 2014): no pivots, no per-pivot reach loops.
 
-    Invariants: every SCC lies entirely inside one partition (partitions
-    are refined only along reachability boundaries), so cross-partition
-    edges are dropped permanently; the pivot is the partition's min node
-    id and belongs to the SCC it extracts, so component labels are the
-    lexicographic min member — byte-identical to the Kosaraju kernel.
-
-    Per round: trim (in/out-degree-0 nodes are singleton SCCs — peels
-    DAG-like regions in bulk), then two multi-source frontier loops
-    (forward + backward reach of every pivot at once), then a 4-way
-    partition split.  Random digraphs finish in 2-3 rounds (trim +
-    giant-SCC pivot); adversarial SCC-chains still converge because
-    trim collapses inter-SCC DAG structure.  If rounds run out, the
-    (by-then small) residue is finished by the single-task kernel."""
-    spark = graph.edges.sparkSession
-    e = graph.edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    part = _node_set(e).select("node", F.lit("r").alias("part")).localCheckpoint(eager=True)
-    act = e
-    assigned: list[DataFrame] = []
-
-    def same_part_edges() -> DataFrame:
-        p1 = F.broadcast(part.select(F.col("node").alias("src"), F.col("part").alias("p1")))
-        p2 = F.broadcast(part.select(F.col("node").alias("dst"), F.col("part").alias("p2")))
-        return (
-            act.join(p1, "src")
-            .join(p2, "dst")
-            .filter(F.col("p1") == F.col("p2"))
-            .select("src", "dst", F.col("p1").alias("part"))
-            .localCheckpoint(eager=True)
-        )
-
+    Each round is ONE :func:`_vertex_supersteps` fixpoint over the open
+    edges plus their reversed copy, carrying two min-labels per node:
+    `fw` = the min id that reaches it, `bw` = the min id it reaches.
+    A node with fw == bw is final: fw reaches it and it reaches fw, so
+    fw is in its SCC, and fw is the min of its ancestors, which include
+    the whole SCC — the label is the lexicographic min member,
+    byte-identical to the Kosaraju kernel.  Members of one SCC share
+    both labels, so an SCC never straddles two (fw, bw) groups: the next
+    round keeps only edges whose endpoints are both open and in the same
+    group, and every round finalizes at least each group's min node.
+    Self-loops are dropped first; a node left with no edge is a
+    singleton.  `max_inner` caps the supersteps per round: a round that
+    has not converged by then, like edges still open after `max_rounds`
+    rounds, is finished by the single-task Kosaraju kernel, so labels
+    never come from an unconverged propagation."""
+    schema = "node string, component string"
+    base = graph.edges.select("src", "dst")
+    e = _checkpoint(base.filter(F.col("src") != F.col("dst")).distinct())
+    labelled: list[DataFrame] = []
+    # the spec's columns are built once: every F call costs driver round trips
+    fw, bw, fwd = F.col("fw"), F.col("bw"), F.col("fwd")
+    init_cols = ["node", F.col("node").alias("fw"), F.col("node").alias("bw")]
+    msg_cols = [F.col("node").alias("src"), "fw", "bw"]
+    by_dst = F.col("dst").alias("node")
+    mins = [F.min(F.when(fwd, fw)).alias("mfw"), F.min(F.when(~fwd, bw)).alias("mbw")]
+    upd_cols = [
+        "node",
+        fw.alias("ofw"),
+        bw.alias("obw"),
+        F.least(fw, F.col("mfw")).alias("fw"),
+        F.least(bw, F.col("mbw")).alias("bw"),
+    ]
+    changed = (fw != F.col("ofw")) | (bw != F.col("obw"))
+    reverse = [F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(False).alias("fwd")]
+    finished = False
     for _ in range(max_rounds):
-        if not part.take(1):
+        try:
+            state = _vertex_supersteps(
+                e.withColumn("fwd", F.lit(True)).unionByName(e.select(*reverse)),
+                init=lambda nodes, nv: nodes.select(*init_cols),
+                message=lambda delta: delta.select(*msg_cols),
+                combine=lambda att: att.groupBy(by_dst).agg(*mins),
+                update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
+                iterations=max_inner,
+                schema="node string, fw string, bw string",
+                delta=lambda state: state.filter(changed).select("node", "fw", "bw"),
+            )
+        except NotConvergedError:
             break
-        ein = same_part_edges()
-        # -- trim: a node with no in- or no out-edge in its partition is
-        # a singleton SCC; peel to fixpoint (kills DAG regions in bulk)
-        while True:
-            both = (
-                ein.select(F.col("src").alias("node"))
-                .distinct()
-                .join(ein.select(F.col("dst").alias("node")).distinct(), "node")
-            )
-            trivial = part.join(both, "node", "left_anti").localCheckpoint(eager=True)
-            if not trivial.take(1):
-                break
-            assigned.append(trivial.select("node", F.col("node").alias("component")))
-            part = part.join(trivial.select("node"), "node", "left_anti").localCheckpoint(
-                eager=True
-            )
-            ein = (
-                ein.join(
-                    F.broadcast(trivial.select(F.col("node").alias("src"))), "src", "left_anti"
-                )
-                .join(
-                    F.broadcast(trivial.select(F.col("node").alias("dst"))), "dst", "left_anti"
-                )
-                .localCheckpoint(eager=True)
-            )
-        if not part.take(1):
+        labelled.append(state.filter(fw == bw).select("node", fw.alias("component")))
+        still = state.filter(fw != bw).select("node", "fw", "bw")
+        finished = not still.take(1)
+        if finished:
             break
-        # -- pivot per partition + simultaneous FW / BW reach
-        pivots = part.groupBy("part").agg(F.min("node").alias("node")).localCheckpoint(eager=True)
-        # a partition whose diameter exceeds max_inner yields an
-        # incomplete reach set (over-split SCCs): raise max_inner, or use
-        # the local Kosaraju route, on graphs with deeper directed paths
-        reach_f = _frontier_reach(ein, pivots, max_inner, keys=("part",))
-        reach_b = _frontier_reach(ein, pivots, max_inner, keys=("part",), reverse=True)
-        scc = reach_f.join(reach_b, ["part", "node"]).localCheckpoint(eager=True)
-        assigned.append(
-            scc.join(pivots.select("part", F.col("node").alias("component")), "part").select(
-                "node", "component"
-            )
+        e = _checkpoint(
+            e.join(still.withColumnRenamed("node", "src"), "src")
+            .join(still.withColumnRenamed("node", "dst"), ["dst", "fw", "bw"])
+            .select("src", "dst")
         )
-        # -- 4-way split of the remainder: (F only | B only | neither)
-        part = (
-            part.join(scc, ["part", "node"], "left_anti")
-            .join(reach_f.withColumn("__f", F.lit(1)), ["part", "node"], "left")
-            .join(reach_b.withColumn("__b", F.lit(1)), ["part", "node"], "left")
-            .select(
-                "node",
-                F.concat(
-                    F.col("part"),
-                    F.when(F.col("__f") == 1, F.lit("F"))
-                    .when(F.col("__b") == 1, F.lit("B"))
-                    .otherwise(F.lit("N")),
-                ).alias("part"),
-            )
-            .localCheckpoint(eager=True)
+    if not finished:
+        # a round that hit max_inner, or edges still open after
+        # max_rounds: finish them on one task
+        labelled.append(
+            _run_local(PropertyGraph(e.select(F.col("src").alias("id")), e), _kosaraju_pdf, schema)
         )
-        act = ein.select("src", "dst")
-    if part.take(1):
-        # residue after max_rounds: same-part edges only (cross-part
-        # edges can't be in an SCC), finished by the single-task kernel
-        residue = same_part_edges().select("src", "dst")
-        leftover = _run_local(
-            PropertyGraph(part.select(F.col("node").alias("id")), residue),
-            _kosaraju_pdf,
-            "node string, component string",
-        )
-        assigned.append(leftover)
-    if not assigned:
-        return spark.createDataFrame([], "node string, component string")
-    return reduce(DataFrame.unionByName, assigned)
+    return (
+        _node_set(base)
+        .join(reduce(DataFrame.unionByName, labelled), "node", "left")
+        .select("node", F.coalesce("component", "node").alias("component"))
+    )
 
 
 def _local_coreness_pdf(pdf, max_k: int):
@@ -1279,12 +1295,14 @@ def strongly_connected_components(
 ) -> DataFrame:
     """SCC over DIRECTED edges.  Small graphs auto-route to a
     single-task Kosaraju kernel; above LOCAL_EDGE_THRESHOLD the
-    distributed FW-BW-Trim decomposition (:func:`_scc_fwbw`) runs.
-    Returns DataFrame(node, component) with component = lexicographic
-    min member id on both paths (parity-tested)."""
+    distributed Min-Label rounds (:func:`_scc_min_label`) run, at most
+    `max_rounds` rounds of at most `max_inner` supersteps each; what
+    they leave unfinished goes to the Kosaraju kernel.  Returns
+    DataFrame(node, component) with component = lexicographic min
+    member id on both paths (parity-tested)."""
     if _is_local(graph, local):
         return _run_local(graph, _kosaraju_pdf, "node string, component string")
-    return _scc_fwbw(graph, max_rounds, max_inner)
+    return _scc_min_label(graph, max_rounds, max_inner)
 
 
 def label_propagation(

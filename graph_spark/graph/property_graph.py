@@ -18,9 +18,10 @@ the vertex-state kernels on one superstep driver
 - The driver picks the layout from |V|: broadcast state while it fits
   (VERTEX_STATE_BROADCAST_LIMIT), else state and an src-partitioned
   edge copy co-partitioned on node, so the joins stay co-located.
-- Lineage is truncated with one localCheckpoint per superstep —
-  unbounded iterative lineage is THE failure mode of DataFrame loops
-  (re-plan cost grows superlinearly).
+- Lineage is truncated with one localCheckpoint per superstep
+  (`_checkpoint`, planned without AQE so the state keeps its node
+  partitioning) — unbounded iterative lineage is THE failure mode of
+  DataFrame loops (re-plan cost grows superlinearly).
 """
 
 from __future__ import annotations

@@ -85,14 +85,21 @@ def configure(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
-    except Exception:
-        pass  # may be fixed by an active query; non-fatal
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
+    # non-fatal, but said: a session can refuse either conf (one fixed
+    # by an active query, say), and the engine then runs on its value
+    for key, value in (
+        ("spark.sql.shuffle.partitions", str(default_parallelism())),
+        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ):
+        try:
+            spark.conf.set(key, value)
+        except Exception as exc:
+            warnings.warn(
+                f"graph_spark could not set {key}={value} on the session ({exc!r}); "
+                "it keeps its current value",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return spark
 
 

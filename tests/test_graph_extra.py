@@ -221,12 +221,12 @@ def test_scc_matches_tarjan(spark, seed):
     "seed",
     [42, pytest.param(5, marks=pytest.mark.nightly), pytest.param(99, marks=pytest.mark.nightly)],
 )
-def test_scc_distributed_fwbw_matches_tarjan(spark, seed):
-    """The distributed FW-BW-Trim path (local=False) must produce the
+def test_scc_distributed_matches_tarjan(spark, seed):
+    """The distributed Min-Label path (local=False) must produce the
     byte-identical (node, component) map as the Tarjan reference — same
     cross-check as the Kosaraju kernel gets, on denser digraphs that
-    exercise trim, pivot extraction, 4-way splits, and (seed 99, low
-    max_rounds) the residue handoff."""
+    exercise several (fw, bw) groups per round, and (seed 99,
+    max_rounds=1) the residue handoff."""
     from graph_spark.graph.algorithms import strongly_connected_components
 
     rng = random.Random(seed)
@@ -244,13 +244,13 @@ def test_scc_distributed_fwbw_matches_tarjan(spark, seed):
     assert got == want
 
 
-def test_scc_distributed_chain_of_cycles(spark):
-    """SCC-chain topology (cycle -> cycle -> cycle) is FW-BW's worst
-    case; trim must not fire (every node has in+out edges) and the
-    split rounds alone must still converge."""
-    from graph_spark.graph.algorithms import strongly_connected_components
+def test_scc_distributed_chain_of_cycles(spark, monkeypatch):
+    """SCC-chain topology (cycle -> cycle -> cycle), with a self-loop and
+    a node seen only in it: each round finalizes one cycle per (fw, bw)
+    group, in the broadcast-state and the shuffle-state layout."""
+    from graph_spark.graph import algorithms as alg
 
-    edges = []
+    edges = [("solo", "solo"), ("c0x1", "c0x1")]
     for c in range(4):  # 4 cycles of 4, chained
         ns = [f"c{c}x{i}" for i in range(4)]
         edges += [(ns[i], ns[(i + 1) % 4]) for i in range(4)]
@@ -258,12 +258,88 @@ def test_scc_distributed_chain_of_cycles(spark):
             edges.append((f"c{c-1}x0", ns[0]))
     edf = spark.createDataFrame(edges, ["src", "dst"])
     g = PropertyGraph(edf.select(F.col("src").alias("id")).distinct(), edf)
+    want = _tarjan(edges)
+    for limit in (alg.VERTEX_STATE_BROADCAST_LIMIT, 0):
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        got = {
+            r["node"]: r["component"]
+            for r in alg.strongly_connected_components(g, local=False).collect()
+        }
+        assert got == want, f"limit={limit}"
+
+
+@pytest.mark.parametrize("n, kwargs", [(100, {}), (30, {"max_inner": 5})])
+def test_scc_distributed_cycle_longer_than_max_inner(spark, n, kwargs):
+    """A directed cycle longer than max_inner (60 by default) cannot
+    converge in one round's supersteps; the round goes to the Kosaraju
+    residue instead of returning unconverged labels, which would split
+    the one SCC into many."""
+    from graph_spark.graph.algorithms import strongly_connected_components
+
+    edges = [(f"n{i:03d}", f"n{(i + 1) % n:03d}") for i in range(n)]
+    edf = spark.createDataFrame(edges, ["src", "dst"])
+    g = PropertyGraph(edf.select(F.col("src").alias("id")).distinct(), edf)
     got = {
         r["node"]: r["component"]
-        for r in strongly_connected_components(g, local=False).collect()
+        for r in strongly_connected_components(g, local=False, **kwargs).collect()
     }
-    want = _tarjan(edges)
-    assert got == want
+    assert got == _tarjan(edges)
+
+
+def test_cc_distributed_unconverged_raises(spark):
+    """An 80-node path needs 80 supersteps to converge; at the default
+    max_iter=50 the distributed kernel must raise a named error, not
+    return the path split into pieces."""
+    from graph_spark.graph.algorithms import NotConvergedError, connected_components
+
+    path = [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(79)]
+    edf = spark.createDataFrame(path + [(b, a) for a, b in path], ["src", "dst"])
+    g = PropertyGraph(edf.select(F.col("src").alias("id")).distinct(), edf)
+    with pytest.raises(NotConvergedError, match="max_iter=50"):
+        connected_components(g, local=False)
+    assert connected_components(g, local=True).select("component").distinct().count() == 1
+
+
+def _planted_digraph():
+    """Three 5-cycles with chords, block 0 -> block 1, and three sources."""
+    edges = []
+    for b in range(3):
+        ns = [f"b{b}n{i}" for i in range(5)]
+        edges += [(ns[i], ns[(i + 1) % 5]) for i in range(5)] + [(ns[0], ns[2]), (ns[3], ns[1])]
+    return edges + [("b0n4", "b1n0"), ("a0", "b0n0"), ("a1", "b0n3"), ("a2", "b1n2")]
+
+
+def test_pregel_kernel_job_counts(spark):
+    """Spark jobs started while building each distributed kernel, read
+    from the status store.  Job counts do not depend on load, so they pin
+    the superstep plan: FW-BW-Trim SCC took 192 jobs on this graph, cc
+    33 and pagerank(3) 18; a checkpoint that forgets the node
+    partitioning, or an extra per-superstep action, shows up here."""
+    from graph_spark.graph import algorithms as alg
+
+    edges = _planted_digraph()
+    sym = sorted(set(edges) | {(b, a) for a, b in edges})
+    graphs = []
+    for es in (edges, sym):
+        edf = spark.createDataFrame(es, ["src", "dst"])
+        graphs.append(PropertyGraph(edf.select(F.col("src").alias("id")).distinct(), edf))
+    g, g_sym = graphs
+    sc = spark.sparkContext
+    jobs = {}
+    for name, build in (
+        ("scc", lambda: alg.strongly_connected_components(g, local=False)),
+        ("cc", lambda: alg.connected_components(g_sym, local=False)),
+        ("pagerank", lambda: alg.pagerank(g, iterations=3, local=False)),
+    ):
+        group = f"job-count-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["scc"] <= 0.4 * 192, jobs
+    assert jobs["cc"] <= 24 and jobs["pagerank"] <= 10, jobs
 
 
 def _bz_coreness(edges_sym):

@@ -540,8 +540,10 @@ def test_pregel_shuffle_state_no_broadcast_exchange(spark):
     plan a shuffle join — NO BroadcastExchange anywhere — while the
     broadcast=True layout forces one via its hint.  The edge side is the
     persisted pre-partitioned copy, so its partitioning survives and the
-    |E| frame is never re-shuffled per superstep."""
-    from graph_spark.graph.algorithms import _attach_contributions
+    |E| frame is never re-shuffled per superstep; the state is
+    checkpointed the way the superstep driver does it (_checkpoint), so
+    its node partitioning survives too."""
+    from graph_spark.graph.algorithms import _attach_contributions, _checkpoint
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -557,12 +559,11 @@ def test_pregel_shuffle_state_no_broadcast_exchange(spark):
             .persist()
         )
         e.count()
-        state = (
+        state = _checkpoint(
             e.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.lit(1.0).alias("rank"))
             .repartition(n_part, "node")
-            .localCheckpoint(eager=True)
         )
         contrib = state.select(F.col("node").alias("src"), F.col("rank").alias("w"))
         shuffle_msgs = (
@@ -573,10 +574,10 @@ def test_pregel_shuffle_state_no_broadcast_exchange(spark):
         plan = _plan(shuffle_msgs)
         assert "BroadcastExchange" not in plan, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-        # exactly two runtime exchanges: the contrib-side realign (|V|)
-        # and the dst message combine (map-side partial) — the persisted
-        # |E| edge copy shows no ENSURE_REQUIREMENTS exchange of its own
-        assert plan.count("ENSURE_REQUIREMENTS") == 2, plan
+        # exactly one runtime exchange: the dst message combine (map-side
+        # partial) — neither the persisted |E| edge copy nor the
+        # checkpointed node-partitioned state is re-shuffled
+        assert plan.count("ENSURE_REQUIREMENTS") == 1, plan
         bcast_msgs = (
             _attach_contributions(e, contrib, True)
             .groupBy(F.col("dst").alias("node"))
