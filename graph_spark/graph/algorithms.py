@@ -117,7 +117,7 @@ def _vertex_supersteps(
     iterations: int,
     schema: str,
     delta=None,
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """The ONE vertex-state superstep driver, Pregelix's shape: a
     superstep is vertex-state ⋈ messages, then a group-by combine, over
     edges that never move.  A kernel is only a spec:
@@ -127,29 +127,31 @@ def _vertex_supersteps(
     - ``message(state)``: the contribution frame (``src`` + payload);
     - ``combine(attached)``: the combine over the edges with the
       contributions attached (:func:`_attach_contributions`);
-    - ``update(state, combined)``: the next state;
+    - ``update(state, combined)``: the next state, called once per
+      superstep, in order;
     - ``delta(state)`` (optional): the vertices that send next
-      superstep; the loop halts once it is empty (one ``take(1)``).
-      A delta loop is a fixpoint: if the delta is still non-empty after
-      `iterations` supersteps it raises :class:`NotConvergedError`
-      instead of returning labels that have not converged.
+      superstep; the loop halts once it is empty (one ``isEmpty`` job).
 
     The driver owns the rest: the edge pre-partition (dst for
     broadcast-state while |V| <= VERTEX_STATE_BROADCAST_LIMIT, else src
     for shuffle-state), node-partitioned state checkpointed once per
     superstep by :func:`_checkpoint` (so no superstep re-shuffles it),
     and unpersisting.  No edges gives an empty `schema` frame.  Returns
-    the final state, all columns.
+    the final state, all columns, and `converged`: True when there are
+    no vertices or the delta emptied within `iterations` supersteps.
+    The caller decides whether running out of supersteps is an error (a
+    fixpoint) or the declared horizon.
     """
     spark = edges.sparkSession
     nodes = _checkpoint(_node_set(edges))  # read twice: the |V| count and the state init
     with _static_plans(spark):
         nv = nodes.count()
     if nv == 0:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], schema), True
     bcast = nv <= VERTEX_STATE_BROADCAST_LIMIT
     n_part = spark.sparkContext.defaultParallelism
     edges = edges.repartition(n_part, "dst" if bcast else "src").persist()
+    converged = False
     try:
         state = _checkpoint(init(nodes, nv).repartition(n_part, "node"))
         active = state
@@ -158,17 +160,12 @@ def _vertex_supersteps(
             state = _checkpoint(update(state, msgs))
             if delta is None:
                 active = state
-            elif not (active := delta(state)).take(1):
+            elif (active := delta(state)).isEmpty():
+                converged = True
                 break
-        else:
-            if delta is not None:
-                raise NotConvergedError(
-                    f"vertices still changing after {iterations} supersteps "
-                    f"on a graph of {nv} vertices"
-                )
     finally:
         edges.unpersist()
-    return state
+    return state, converged
 
 
 # edge-count memo keyed by the underlying DataFrame object: the catalog
@@ -307,7 +304,7 @@ def _local_lp_pdf(pdf, max_iter: int):
 
 def _local_sssp_pdf(pdf, source: str, weight_col: str, max_iter: int):
     """numpy Bellman-Ford: one simultaneous relaxation sweep per round,
-    identical to the distributed union+min round."""
+    the same synchronous round as the distributed superstep."""
     import numpy as np
     import pandas as pd
 
@@ -421,7 +418,7 @@ def _frontier_reach(
         if "d" in seeds.columns:
             frontier = frontier.withColumn("d", F.lit(hop))
         frontier = _checkpoint(frontier)
-        if not frontier.take(1):
+        if frontier.isEmpty():
             break
         visited = visited.unionByName(frontier)
     return visited
@@ -438,13 +435,17 @@ def bfs_distances(
     local=None auto-routes small graphs to the numpy kernel (identical
     semantics, one task); the distributed loop is the 100 TB path.
     """
+    schema = "node string, d long"
     if _is_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_multi_bfs_pdf(pdf, [source], max_hops)[["node", "d"]],
-            "node string, d long",
+            schema,
         )
-    seeds = graph.edges.sparkSession.createDataFrame([(source, 0)], ["node", "d"])
+    spark = graph.edges.sparkSession
+    if _edge_count(graph) == 0:  # no rows, like the local route
+        return spark.createDataFrame([], schema)
+    seeds = spark.createDataFrame([(source, 0)], ["node", "d"])
     return _frontier_reach(graph.edges, seeds, max_hops)
 
 
@@ -489,15 +490,15 @@ def multi_source_bfs(
     closeness/eccentricity at scale, where per-node exact centrality
     (O(V) BFS runs) is infeasible.  Returns DataFrame(lm, node, d).
     """
+    schema = "lm string, node string, d long"
     if _is_local(graph, local):
         return _run_local(
-            graph,
-            lambda pdf: _local_multi_bfs_pdf(pdf, sources, max_hops),
-            "lm string, node string, d long",
+            graph, lambda pdf: _local_multi_bfs_pdf(pdf, sources, max_hops), schema
         )
-    seeds = graph.edges.sparkSession.createDataFrame(
-        [(s, s, 0) for s in sources], ["lm", "node", "d"]
-    )
+    spark = graph.edges.sparkSession
+    if _edge_count(graph) == 0:  # no rows, like the local route
+        return spark.createDataFrame([], schema)
+    seeds = spark.createDataFrame([(s, s, 0) for s in sources], ["lm", "node", "d"])
     return _frontier_reach(graph.edges, seeds, max_hops, keys=("lm",))
 
 
@@ -539,22 +540,21 @@ def connected_components(
         F.least(comp, F.col("nbr_min")).alias("component"),
     ]
     changed = comp != F.col("old_component")
-    try:
-        state = _vertex_supersteps(
-            graph.edges.select("src", "dst"),
-            init=lambda nodes, nv: nodes.select(*init_cols),
-            message=lambda delta: delta.select(*msg_cols),
-            combine=lambda att: att.groupBy(by_dst).agg(nbr_min),
-            update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
-            iterations=max_iter,
-            schema=schema,
-            delta=lambda state: state.filter(changed).select("node", "component"),
-        )
-    except NotConvergedError as exc:
+    state, converged = _vertex_supersteps(
+        graph.edges.select("src", "dst"),
+        init=lambda nodes, nv: nodes.select(*init_cols),
+        message=lambda delta: delta.select(*msg_cols),
+        combine=lambda att: att.groupBy(by_dst).agg(nbr_min),
+        update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
+        iterations=max_iter,
+        schema=schema,
+        delta=lambda state: state.filter(changed).select("node", "component"),
+    )
+    if not converged:
         raise NotConvergedError(
-            f"connected_components did not converge within max_iter={max_iter}: {exc}; "
-            "raise max_iter or use local=True"
-        ) from None
+            f"connected_components did not converge within max_iter={max_iter}: "
+            "labels still changing; raise max_iter or use local=True"
+        )
     return state.select("node", "component")
 
 
@@ -621,7 +621,7 @@ def _rank_propagation(
         update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
         iterations=iterations,
         schema=schema,
-    ).select("node", "rank")
+    )[0].select("node", "rank")
 
 
 def pagerank(
@@ -703,7 +703,7 @@ def incremental_components(labels: DataFrame, new_edges: DataFrame) -> DataFrame
         .distinct()
     )
     ce_sym = ce.union(ce.select(F.col("cb").alias("ca"), F.col("ca").alias("cb")))
-    if not ce_sym.take(1):
+    if ce_sym.isEmpty():
         return lab_all
     cg = connected_components(
         PropertyGraph(
@@ -762,7 +762,7 @@ def katz_centrality(
         ),
         iterations=iterations,
         schema=schema,
-    ).select("node", "katz")
+    )[0].select("node", "katz")
 
 
 def _local_louvain_pdf(pdf, rounds: int):
@@ -817,10 +817,14 @@ def louvain_local_rounds(
     The synchronous schedule is the distributed-friendly variant
     (classic Louvain is inherently sequential); a fixed round count
     keeps it deterministic — label oscillation is possible and
-    harmless for the declared semantics.  Per round, distributed:
-    ONE shuffle for the (v, neighbor-community) message combine over
-    stationary edges, community sizes broadcast.  Small graphs
-    auto-route to the numpy kernel.  Returns DataFrame(node, comm).
+    harmless for the declared semantics.  Returns DataFrame(node, comm).
+
+    Distributed it is a fixed-round :func:`_vertex_supersteps` spec
+    over the reversed edges, so the superstep's one message shuffle
+    counts e_vc by (v, neighbor community); the update sums sigma from
+    the (node, k, comm) state and takes the argmax as
+    min(struct(-gain, comm)).  Small graphs auto-route to the numpy
+    kernel.
     """
     if _is_local(graph, local):
         return _run_local(
@@ -828,63 +832,44 @@ def louvain_local_rounds(
             lambda pdf: _local_louvain_pdf(pdf, rounds),
             "node string, comm string",
         )
-    spark = graph.edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    edges = graph.edges.select("src", "dst").repartition(n_part, "src").persist()
-    m2 = edges.count()
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("k"))
-    comm = deg.select("node", F.col("node").alias("comm")).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        cm = F.broadcast(comm)
-        sig = F.broadcast(
-            comm.join(deg, "node").groupBy("comm").agg(F.sum("k").alias("s"))
+    m2 = _edge_count(graph)
+    # built once, outside the superstep loop (see _scc_min_label)
+    k, comm = F.col("k"), F.col("comm")
+    init_cols = [F.col("src").alias("node"), "k", F.col("src").alias("comm")]
+    msg_cols = [F.col("node").alias("src"), "comm"]
+    by_comm = [F.col("dst").alias("node"), "comm"]
+    evc = F.count(F.lit(1)).alias("evc")
+    own_cols = ["node", "comm", F.lit(0).cast("long").alias("evc")]
+    max_evc = F.max("evc").alias("evc")
+    cur_cols = ["node", "k", comm.alias("cur")]
+    sigma = F.sum("k").alias("sigma")
+    gain = F.lit(m2) * F.col("evc") - k * (
+        F.col("sigma") - F.when(F.col("cur") == comm, k).otherwise(F.lit(0))
+    )
+    best = F.min(F.struct((-gain).alias("ng"), comm)).alias("best")
+    upd_cols = ["node", "k", F.col("best.comm").alias("comm")]
+
+    def update(state, msgs):
+        cand = msgs.unionByName(state.select(*own_cols)).groupBy("node", "comm").agg(max_evc)
+        return (
+            cand.join(state.select(*cur_cols), "node")
+            .join(state.groupBy("comm").agg(sigma), "comm")
+            .groupBy("node", "k")
+            .agg(best)
+            .select(*upd_cols)
         )
-        evc = (
-            edges.join(
-                cm.select(F.col("node").alias("dst"), F.col("comm").alias("ncomm")),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("v"), F.col("ncomm").alias("comm"))
-            .agg(F.count(F.lit(1)).cast("long").alias("evc"))
-        )
-        own = comm.select(
-            F.col("node").alias("v"), "comm", F.lit(0).cast("long").alias("evc")
-        )
-        cand = (
-            evc.unionByName(own)
-            .groupBy("v", "comm")
-            .agg(F.max("evc").alias("evc"))
-        )
-        cur = cm.select(F.col("node").alias("v"), F.col("comm").alias("cur_comm"))
-        dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("k").alias("kv")))
-        sc = (
-            cand.join(dv, "v")
-            .join(cur, "v")
-            .join(sig.withColumnRenamed("s", "sigma"), "comm")
-            .select(
-                "v",
-                "comm",
-                (
-                    F.lit(m2) * F.col("evc")
-                    - F.col("kv")
-                    * (
-                        F.col("sigma")
-                        - F.when(F.col("cur_comm") == F.col("comm"), F.col("kv")).otherwise(
-                            F.lit(0)
-                        )
-                    )
-                ).alias("s"),
-            )
-        )
-        w = Window.partitionBy("v").orderBy(F.col("s").desc(), F.col("comm"))
-        comm = (
-            sc.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select(F.col("v").alias("node"), "comm")
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return comm
+
+    edges = graph.edges.select("src", "dst")
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("k"))
+    return _vertex_supersteps(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        init=lambda nodes, nv: deg.select(*init_cols),
+        message=lambda state: state.select(*msg_cols),
+        combine=lambda att: att.groupBy(*by_comm).agg(evc),
+        update=update,
+        iterations=rounds,
+        schema="node string, k long, comm string",
+    )[0].select("node", "comm")
 
 
 def personalized_pagerank(
@@ -952,44 +937,45 @@ def shortest_paths_weighted(
 ) -> DataFrame:
     """Bellman-Ford style relaxation (Dijkstra analog on Spark: no
     priority queue across partitions, so iterate relaxations to
-    fixpoint).  Returns DataFrame(node, dist).  Hash-declared with
+    fixpoint).  Returns DataFrame(node, dist) for every node reached
+    within `max_iter` rounds; `max_iter` is a hop horizon, not a
+    convergence cap (g14 declares 8 rounds).  Hash-declared with
     integer weights (g14); small graphs auto-route to the numpy kernel
-    with identical per-round semantics."""
+    with identical per-round semantics.
+
+    Distributed it is connected_components' delta spec with ``+ w``:
+    only the nodes whose distance improved last round send, the combine
+    is one min(d + w) by dst, and old and new distances sit side by
+    side in the checkpointed state, so no round joins state to state."""
+    schema = "node string, dist double"
     if _is_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_sssp_pdf(pdf, source, weight_col, max_iter),
-            "node string, dist double",
+            schema,
             cols=("src", "dst", weight_col),
         )
     spark = graph.edges.sparkSession
-    dist = spark.createDataFrame([(source, 0.0)], ["node", "dist"]).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        dd = F.broadcast(dist)
-        cand = (
-            graph.edges.join(dd, graph.edges.src == dd.node, "inner")
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col(weight_col)).alias("dist"))
-        )
-        new_dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        same = (
-            new_dist.alias("n")
-            .join(dist.alias("o"), F.col("n.node") == F.col("o.node"), "left")
-            .filter(F.col("o.dist").isNull() | (F.col("n.dist") < F.col("o.dist")))
-            .take(1)
-        )
-        dist = new_dist
-        # `same` is empty only when NO node improved and none is new (a
-        # new node has o.dist NULL and lands in the probe), so the old
-        # prev/new count() comparison was two redundant full-scan jobs
-        # per relaxation round
-        if not same:
-            break
-    return dist
+    # built once, outside the superstep loop (see _scc_min_label)
+    dist = F.col("dist")
+    msg_cols = [F.col("node").alias("src"), dist.alias("d")]
+    by_dst = F.col("dst").alias("node")
+    nbr_min = F.min(F.col("d") + F.col("w")).alias("nbr_min")
+    upd_cols = ["node", dist.alias("old_dist"), F.least(dist, F.col("nbr_min")).alias("dist")]
+    changed = ~dist.eqNullSafe(F.col("old_dist"))
+    # the source is in the state even when no edge touches it
+    at_source = spark.createDataFrame([(source, 0.0)], schema)
+    state = _vertex_supersteps(
+        graph.edges.select("src", "dst", F.col(weight_col).alias("w")),
+        init=lambda nodes, nv: nodes.join(at_source, "node", "full"),
+        message=lambda delta: delta.filter(dist.isNotNull()).select(*msg_cols),
+        combine=lambda att: att.groupBy(by_dst).agg(nbr_min),
+        update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
+        iterations=max_iter,
+        schema=schema,
+        delta=lambda state: state.filter(changed).select("node", "dist"),
+    )[0]
+    return state.filter(dist.isNotNull()).select("node", "dist")
 
 
 def shortest_paths_delta_stepping(
@@ -1057,7 +1043,7 @@ def shortest_paths_delta_stepping(
             )
             frontier = changed.filter(bucket == b).localCheckpoint(eager=True)
             dist = new_dist
-            if not frontier.take(1):
+            if frontier.isEmpty():
                 break
         settled = dist.filter(bucket == b)
         dist = relax(settled, edges_h, dist)
@@ -1065,24 +1051,27 @@ def shortest_paths_delta_stepping(
     return dist
 
 
-def _peel(edges: DataFrame, k: int, max_rounds: int | None = None) -> DataFrame:
-    """Peel checkpointed (src, dst) edges to the k-core — the round
-    k_core documents — until the fixpoint or `max_rounds` rounds.
-    Returns the surviving edges, checkpointed."""
+def _peel(
+    edges: DataFrame, n_edges: int, k: int, max_rounds: int | None = None
+) -> tuple[DataFrame, int]:
+    """Peel checkpointed (src, dst) edges, `n_edges` of them, to the
+    k-core — the round k_core documents — until the fixpoint or
+    `max_rounds` rounds.  Each round counts the survivors once.
+    Returns the surviving edges, checkpointed, and their count."""
     rounds = itertools.count() if max_rounds is None else range(max_rounds)
     for _ in rounds:
         deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(eager=True)
-        n_before = edges.count()
         kb = F.broadcast(keep)
         edges = (
             edges.join(kb, edges.src == kb.node, "left_semi")
             .join(kb, edges.dst == kb.node, "left_semi")
             .localCheckpoint(eager=True)
         )
-        if edges.count() == n_before:
+        n_before, n_edges = n_edges, edges.count()
+        if n_edges == n_before:
             break
-    return edges
+    return edges, n_edges
 
 
 def k_core(
@@ -1102,7 +1091,8 @@ def k_core(
             lambda pdf: _local_kcore_pdf(pdf, k, max_iter),
             "node string, degree long",
         )
-    edges = _peel(graph.edges.select("src", "dst").localCheckpoint(eager=True), k, max_iter)
+    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
+    edges = _peel(edges, edges.count(), k, max_iter)[0]
     return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
@@ -1195,22 +1185,21 @@ def _scc_min_label(graph: PropertyGraph, max_rounds: int, max_inner: int) -> Dat
     reverse = [F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(False).alias("fwd")]
     finished = False
     for _ in range(max_rounds):
-        try:
-            state = _vertex_supersteps(
-                e.withColumn("fwd", F.lit(True)).unionByName(e.select(*reverse)),
-                init=lambda nodes, nv: nodes.select(*init_cols),
-                message=lambda delta: delta.select(*msg_cols),
-                combine=lambda att: att.groupBy(by_dst).agg(*mins),
-                update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
-                iterations=max_inner,
-                schema="node string, fw string, bw string",
-                delta=lambda state: state.filter(changed).select("node", "fw", "bw"),
-            )
-        except NotConvergedError:
+        state, converged = _vertex_supersteps(
+            e.withColumn("fwd", F.lit(True)).unionByName(e.select(*reverse)),
+            init=lambda nodes, nv: nodes.select(*init_cols),
+            message=lambda delta: delta.select(*msg_cols),
+            combine=lambda att: att.groupBy(by_dst).agg(*mins),
+            update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
+            iterations=max_inner,
+            schema="node string, fw string, bw string",
+            delta=lambda state: state.filter(changed).select("node", "fw", "bw"),
+        )
+        if not converged:
             break
         labelled.append(state.filter(fw == bw).select("node", fw.alias("component")))
         still = state.filter(fw != bw).select("node", "fw", "bw")
-        finished = not still.take(1)
+        finished = still.isEmpty()
         if finished:
             break
         e = _checkpoint(
@@ -1274,10 +1263,11 @@ def core_decomposition(
         )
     spark = graph.edges.sparkSession
     edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
+    n_edges = edges.count()
     levels: list[DataFrame] = []
     k = 1
-    while k <= max_k and edges.take(1):
-        edges = _peel(edges, k)
+    while k <= max_k and n_edges:
+        edges, n_edges = _peel(edges, n_edges, k)
         survivors = edges.select(F.col("src").alias("node")).distinct()
         levels.append(survivors.withColumn("coreness", F.lit(k).cast("long")))
         k += 1
@@ -1337,7 +1327,7 @@ def label_propagation(
         ),
         iterations=max_iter,
         schema=schema,
-    )
+    )[0]
 
 
 def node_similarity_jaccard(
@@ -1744,7 +1734,7 @@ def maximal_weight_matching(
             .join(used, remaining.dst == used.n, "left_anti")
             .localCheckpoint(eager=True)
         )
-        if not remaining.take(1):
+        if remaining.isEmpty():
             break
     return matched
 
@@ -1791,7 +1781,7 @@ def minimum_spanning_forest(
             .join(cb, e.dst == F.col("bn"))
             .filter(F.col("ac") != F.col("bc"))
         )
-        if not crossing.take(1):
+        if crossing.isEmpty():
             spanned = True
             break
         pick = (
@@ -1828,7 +1818,7 @@ def minimum_spanning_forest(
             .join(cb, e.dst == F.col("bn"))
             .filter(F.col("ac") != F.col("bc"))
         )
-        if left_over.take(1):
+        if not left_over.isEmpty():
             raise RuntimeError(
                 f"minimum_spanning_forest: crossing edges remain after "
                 f"{max_rounds} rounds — the forest does not span yet; raise "
@@ -1924,30 +1914,39 @@ def threshold_cascade(
     frame: only nodes with symmetric edges can activate (activation
     needs a degree), so a vertex list would be dead input.
 
-    Per round: one shuffle (active-neighbor counts) + broadcast
-    anti-join against the active set; active-set size is bounded by
-    |V| of the (rolled-up) graph.
+    A fixed-round :func:`_vertex_supersteps` spec: the active nodes
+    send, the one shuffle counts them by dst, and the update stamps the
+    round from a counter it closes over (:func:`_vertex_supersteps`
+    calls it once per superstep, in order).  A seed no edge touches is unioned back at
+    r = 0.
     """
-    deg = edges_sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    act = seeds.select("node", F.lit(0).alias("r")).localCheckpoint(eager=True)
-    for i in range(1, rounds + 1):
-        na = (
-            edges_sym.join(
-                F.broadcast(act.select(F.col("node").alias("src"))), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.count(F.lit(1)).alias("na"))
-        )
-        new = (
-            na.join(act, "node", "left_anti")
-            .join(F.broadcast(deg), "node")
-            .filter(2 * F.col("na") >= F.col("d"))
-            .select("node", F.lit(i).alias("r"))
-        )
-        act = act.unionByName(new).localCheckpoint(eager=True)
-    return act
+    edges = edges_sym.select("src", "dst")
+    seed_set = seeds.select("node").distinct().withColumn("r", F.lit(0))
+    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+    # built once, outside the superstep loop (see _scc_min_label)
+    r = F.col("r")
+    active = r.isNotNull()
+    msg_cols = [F.col("node").alias("src")]
+    by_dst = F.col("dst").alias("node")
+    na = F.count(F.lit(1)).alias("na")
+    reached = 2 * F.col("na") >= F.col("d")
+    round_no = itertools.count(1)
+
+    def update(state, msgs):
+        now = F.when(reached, F.lit(next(round_no)))
+        return state.join(msgs, "node", "left").select("node", "d", F.coalesce(r, now).alias("r"))
+
+    state = _vertex_supersteps(
+        edges,
+        init=lambda nodes, nv: nodes.join(deg, "node", "left").join(seed_set, "node", "left"),
+        message=lambda state: state.filter(active).select(*msg_cols),
+        combine=lambda att: att.groupBy(by_dst).agg(na),
+        update=update,
+        iterations=rounds,
+        schema="node string, d long, r int",
+    )[0]
+    act = state.filter(active).select("node", "r")
+    return act.unionByName(seed_set.join(act, "node", "left_anti"))
 
 
 def luby_mis(nodes: DataFrame, edges_sym: DataFrame, rounds: int = 3) -> DataFrame:

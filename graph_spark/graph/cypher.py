@@ -1469,7 +1469,7 @@ def _shortest_frame(
                 .join(acc.select(a, b), [a, b], "left_anti")
                 .localCheckpoint(eager=True)
             )
-        if not frontier.take(1):
+        if frontier.isEmpty():
             break
         acc = acc.unionByName(frontier.withColumn(plen, F.lit(level)))
     if edge.undirected:
@@ -1611,7 +1611,7 @@ def _all_shortest_frame(
             .join(acc.select(a, b), [a, b], "left_anti")
             .localCheckpoint(eager=True)
         )
-        if not frontier.take(1):
+        if frontier.isEmpty():
             break
         acc = acc.unionByName(frontier.withColumn(plen, F.lit(level)))
     out = acc.filter(F.col(a) != F.col(b))

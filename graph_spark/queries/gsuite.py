@@ -3845,8 +3845,9 @@ GROUP BY 1 ORDER BY 1"""
     "identical partitions.  Synchronous scheduling is what makes "
     "the phase distributable (classic Louvain is sequential); per "
     "round the engine pays ONE (v, neighbor-community) combine "
-    "shuffle over stationary src-partitioned edges, with community "
-    "sizes broadcast — the LPA cost model with a weighted argmax",
+    "shuffle over stationary edges (the shared `_vertex_supersteps`), "
+    "community sizes summed from the vertex state — the LPA cost "
+    "model with a weighted argmax",
 )
 def g76(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..graph.algorithms import louvain_local_rounds
@@ -5319,9 +5320,9 @@ act{i} AS (SELECT * FROM act{i - 1} UNION ALL SELECT * FROM new{i})"""
     "the exact integer comparison 2*|N(v) ∩ active| >= deg(v) — no "
     "float threshold to disagree on.  BOTH engines run exactly 4 "
     "rounds (declared horizon, not a fixpoint race — the g78 lesson).  "
-    "Per round: one shuffle (active-neighbor count per node) + one "
-    "broadcast anti-join against the active set; the diffusion / "
-    "viral-adoption primitive the G-suite lacked",
+    "Per round: one `_vertex_supersteps` superstep, whose "
+    "one shuffle is the active-neighbor count per node; the diffusion "
+    "/ viral-adoption primitive the G-suite lacked",
 )
 def g101(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..graph.algorithms import threshold_cascade
@@ -5532,7 +5533,7 @@ def g105(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scale each piece is the already-benchmarked distributed kernel",
 )
 def g106(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..graph.algorithms import strongly_connected_components
+    from ..graph.algorithms import _frontier_reach, strongly_connected_components
 
     c = Catalog(spark, sf_dir)
     li = c.table("lineitem").select("l_orderkey", "l_suppkey")
@@ -5560,38 +5561,22 @@ def g106(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not ne.take(1):  # sf0.001's trade graph has no >=150 pair
         return spark.createDataFrame([], "node string, cls string")
     comp = strongly_connected_components(PropertyGraph(nodes, ne))
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("c"))
-    core_lbl = sizes.orderBy(F.col("c").desc(), "component").take(1)[0]["component"]
-    core = comp.filter(F.col("component") == core_lbl).select(
-        F.col("node").alias("id")
-    )
-
-    def closure(edges: DataFrame, seed: DataFrame) -> DataFrame:
-        """Nodes with a >=1-hop path INTO the seed set along `edges`
-        (pass transposed edges for reached-from)."""
-        reached = seed.localCheckpoint(eager=True)
-        frontier = reached
-        while True:
-            nxt = (
-                edges.join(frontier, edges.dst == frontier.id)
-                .select(F.col("src").alias("id"))
-                .distinct()
-                .join(reached, "id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if not nxt.take(1):
-                return reached
-            reached = reached.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-
-    to_core = closure(ne, core)
-    from_core = closure(ne.select(F.col("dst").alias("src"), F.col("src").alias("dst")), core)
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("c")).collect()
+    core_lbl = min(sizes, key=lambda r: (-r["c"], r["component"]))["component"]
+    core = comp.filter(F.col("component") == core_lbl).select("node")
+    # reach in |V| hops is complete: reversed edges give the nodes with a
+    # path INTO the core, forward edges the nodes the core reaches
+    horizon = sum(r["c"] for r in sizes)
+    rev = ne.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    to_core = _frontier_reach(rev, core, horizon)
+    from_core = _frontier_reach(ne, core, horizon)
     cls = (
-        nodes.join(core.withColumn("__c", F.lit(1)), "id", "left")
-        .join(to_core.select("id").withColumn("__i", F.lit(1)), "id", "left")
-        .join(from_core.select("id").withColumn("__o", F.lit(1)), "id", "left")
+        nodes.select(F.col("id").alias("node"))
+        .join(core.withColumn("__c", F.lit(1)), "node", "left")
+        .join(to_core.withColumn("__i", F.lit(1)), "node", "left")
+        .join(from_core.withColumn("__o", F.lit(1)), "node", "left")
         .select(
-            F.col("id").alias("node"),
+            "node",
             F.when(F.col("__c").isNotNull(), "core")
             .when(F.col("__i").isNotNull(), "in")
             .when(F.col("__o").isNotNull(), "out")

@@ -63,10 +63,15 @@ def test_graph_algorithms_on_empty(spark):
         assert alg.connected_components(g, local=local).count() == 0
     out = alg.strongly_connected_components(g, local=False)
     assert out.count() == 0 and out.columns == ["node", "component"]
-    # a fully empty graph yields an empty frontier — no rows at all
+    # a fully empty graph yields no rows at all, on both routes
     # (contrast: an absent source on a NON-empty graph reports itself
     # at distance 0, covered in test_graph_extra)
-    assert alg.bfs_distances(g, "x", 2, local=True).count() == 0
+    ew = spark.createDataFrame([], "src string, dst string, w double")
+    gw = PropertyGraph(ew.select(F.col("src").alias("id")).distinct(), ew)
+    for local in (True, False):
+        assert alg.bfs_distances(g, "x", 2, local=local).count() == 0, local
+        assert alg.multi_source_bfs(g, ["x", "y"], 2, local=local).count() == 0, local
+        assert alg.shortest_paths_weighted(gw, "x", "w", local=local).count() == 0, local
 
 
 def test_relational_ops_on_empty(spark):

@@ -176,22 +176,28 @@ def _py_kcore(edges, k):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_weighted_sssp_local_distributed_reference_parity(spark, seed):
+def test_weighted_sssp_local_distributed_reference_parity(spark, seed, monkeypatch):
+    """Bellman-Ford == the python reference on every execution path, to
+    the fixpoint (12 rounds) and cut at a 3-round hop horizon."""
     from graph_spark.graph.algorithms import shortest_paths_weighted
 
     rng = random.Random(seed * 31)
     edges = _random_graph(seed)
     wedges = [(a, b, 1 + rng.randrange(9)) for a, b in edges]
-    want = _py_sssp(wedges, "n0", 12)
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
     v = e.select(F.col("src").alias("id")).distinct()
     g = PropertyGraph(v, e)
-    for local in (True, False):
-        got = {
-            r["node"]: r["dist"]
-            for r in shortest_paths_weighted(g, "n0", "w", max_iter=12, local=local).collect()
-        }
-        assert got == want, f"local={local} seed={seed}"
+    for max_iter in (12, 3):
+        want = _py_sssp(wedges, "n0", max_iter)
+        for local, limit in PREGEL_MODES:
+            monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+            got = {
+                r["node"]: r["dist"]
+                for r in shortest_paths_weighted(
+                    g, "n0", "w", max_iter=max_iter, local=local
+                ).collect()
+            }
+            assert got == want, f"local={local} limit={limit} max_iter={max_iter} seed={seed}"
 
 
 @pytest.mark.parametrize("seed", SEEDS)
@@ -861,7 +867,7 @@ def test_katz_local_distributed_reference_parity(spark, seed, monkeypatch):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_louvain_local_distributed_reference_parity(spark, seed):
+def test_louvain_local_distributed_reference_parity(spark, seed, monkeypatch):
     """Synchronous integer local-moving rounds == plain-python reference
     on random sparse graphs, on both execution paths (tie-breaks and all
     — the scores are exact integers, so equality is exact)."""
@@ -897,12 +903,39 @@ def test_louvain_local_distributed_reference_parity(spark, seed):
     e = spark.createDataFrame(edges, ["src", "dst"])
     v = e.select(F.col("src").alias("id")).distinct()
     g = PropertyGraph(v, e)
-    for local in (True, False):
+    for local, limit in PREGEL_MODES:
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
         got = {
             r["node"]: r["comm"]
             for r in louvain_local_rounds(g, rounds=3, local=local).collect()
         }
-        assert got == comm, f"local={local} seed={seed}"
+        assert got == comm, f"local={local} limit={limit} seed={seed}"
+
+
+def test_threshold_cascade_reference_parity(spark, monkeypatch):
+    """threshold_cascade == the python synchronous majority spread
+    (2 * active neighbors >= degree) on a fixed random graph, in both
+    superstep layouts; a seed no edge touches is reported at r = 0."""
+    edges = _random_graph(11, n_nodes=40, n_edges=60)
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+    seeds = ["n0", "n7", "n13", "lonely"]
+    want = {u: 0 for u in seeds}
+    for i in range(1, 5):
+        new = {
+            u
+            for u, ns in adj.items()
+            if u not in want and 2 * sum(w in want for w in ns) >= len(ns)
+        }
+        want.update(dict.fromkeys(new, i))
+    assert max(want.values()) > 1  # the spread runs past the first round
+    e = spark.createDataFrame(edges, ["src", "dst"])
+    s = spark.createDataFrame([(u,) for u in seeds], ["node"])
+    for limit in (STATE_LIMIT, 0):
+        monkeypatch.setattr(alg, "VERTEX_STATE_BROADCAST_LIMIT", limit)
+        got = {r["node"]: r["r"] for r in alg.threshold_cascade(e, s, rounds=4).collect()}
+        assert got == want, f"limit={limit}"
 
 
 @pytest.mark.parametrize("seed", SEEDS)
