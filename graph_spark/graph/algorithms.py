@@ -9,10 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import threading
 import weakref
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .property_graph import PropertyGraph
@@ -65,6 +66,11 @@ def _attach_contributions(edges: DataFrame, contrib: DataFrame, broadcast: bool)
     return edges.join(rhs, "src")
 
 
+# per session (keyed by id): [threads inside _static_plans, saved AQE value]
+_STATIC_HELD: dict[int, list] = {}
+_STATIC_LOCK = threading.Lock()
+
+
 @contextlib.contextmanager
 def _static_plans(spark):
     """Plan the actions run inside without AQE (restored after).
@@ -76,22 +82,41 @@ def _static_plans(spark):
     re-shuffle it.  Superstep plans have no skew join to split and a
     fixed partition count; what they give up is AQE's runtime switch of
     a sort-merge join to a broadcast join.  The switch is session-wide
-    while the block runs."""
-    conf = spark.conf
-    aqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
+    while the block runs; overlapping blocks on other threads share it:
+    the first to enter saves the value and the last to leave restores
+    it."""
+    conf, key = spark.conf, id(spark)
+    with _STATIC_LOCK:
+        held = _STATIC_HELD.get(key)
+        if held is None:
+            held = _STATIC_HELD[key] = [0, conf.get("spark.sql.adaptive.enabled")]
+            conf.set("spark.sql.adaptive.enabled", "false")
+        held[0] += 1
     try:
         yield
     finally:
-        conf.set("spark.sql.adaptive.enabled", aqe)
+        with _STATIC_LOCK:
+            held[0] -= 1
+            if held[0] == 0:
+                del _STATIC_HELD[key]
+                conf.set("spark.sql.adaptive.enabled", held[1])
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
+def _checkpoint(df: DataFrame, count=None):
     """Eager localCheckpoint planned by :func:`_static_plans`: one job
     (plus one per broadcast in the plan), and the checkpoint keeps
-    `df`'s output partitioning."""
+    `df`'s output partitioning.  With a boolean Column `count` it
+    returns ``(checkpoint, n)``, n = the rows for which `count` is true
+    (``F.lit(True)``: all rows), observed by that same job instead of a
+    separate count or isEmpty job."""
+    if count is None:
+        with _static_plans(df.sparkSession):
+            return df.localCheckpoint(eager=True)
+    obs = Observation()
+    df = df.observe(obs, F.count_if(count).alias("n"))
     with _static_plans(df.sparkSession):
-        return df.localCheckpoint(eager=True)
+        df = df.localCheckpoint(eager=True)
+    return df, obs.get["n"]
 
 
 class NotConvergedError(RuntimeError):
@@ -122,30 +147,31 @@ def _vertex_supersteps(
     superstep is vertex-state ⋈ messages, then a group-by combine, over
     edges that never move.  A kernel is only a spec:
 
-    - ``init(nodes, nv)``: state keyed on ``node`` from the persisted
+    - ``init(nodes, nv)``: state keyed on ``node`` from the checkpointed
       node set and |V|;
     - ``message(state)``: the contribution frame (``src`` + payload);
     - ``combine(attached)``: the combine over the edges with the
       contributions attached (:func:`_attach_contributions`);
     - ``update(state, combined)``: the next state, called once per
       superstep, in order;
-    - ``delta(state)`` (optional): the vertices that send next
-      superstep; the loop halts once it is empty (one ``isEmpty`` job).
+    - ``delta`` (optional): a boolean Column over the state, true for
+      the vertices that send next superstep; the loop halts once no
+      vertex has it, read from the count the superstep's checkpoint
+      observes (no job of its own).
 
-    The driver owns the rest: the edge pre-partition (dst for
-    broadcast-state while |V| <= VERTEX_STATE_BROADCAST_LIMIT, else src
-    for shuffle-state), node-partitioned state checkpointed once per
-    superstep by :func:`_checkpoint` (so no superstep re-shuffles it),
-    and unpersisting.  No edges gives an empty `schema` frame.  Returns
-    the final state, all columns, and `converged`: True when there are
-    no vertices or the delta emptied within `iterations` supersteps.
-    The caller decides whether running out of supersteps is an error (a
-    fixpoint) or the declared horizon.
+    The driver owns the rest: |V| (observed by the node-set
+    checkpoint), the edge pre-partition (dst for broadcast-state while
+    |V| <= VERTEX_STATE_BROADCAST_LIMIT, else src for shuffle-state),
+    node-partitioned state checkpointed once per superstep by
+    :func:`_checkpoint` (so no superstep re-shuffles it; one job per
+    superstep plus its broadcasts), and unpersisting.  No edges gives
+    an empty `schema` frame.  Returns the final state, all columns, and
+    `converged`: True when there are no vertices or the delta emptied
+    within `iterations` supersteps.  The caller decides whether running
+    out of supersteps is an error (a fixpoint) or the declared horizon.
     """
     spark = edges.sparkSession
-    nodes = _checkpoint(_node_set(edges))  # read twice: the |V| count and the state init
-    with _static_plans(spark):
-        nv = nodes.count()
+    nodes, nv = _checkpoint(_node_set(edges), F.lit(True))
     if nv == 0:
         return spark.createDataFrame([], schema), True
     bcast = nv <= VERTEX_STATE_BROADCAST_LIMIT
@@ -157,12 +183,14 @@ def _vertex_supersteps(
         active = state
         for _ in range(iterations):
             msgs = combine(_attach_contributions(edges, message(active), bcast))
-            state = _checkpoint(update(state, msgs))
             if delta is None:
-                active = state
-            elif (active := delta(state)).isEmpty():
+                state = active = _checkpoint(update(state, msgs))
+                continue
+            state, n_active = _checkpoint(update(state, msgs), delta)
+            if n_active == 0:
                 converged = True
                 break
+            active = state.filter(delta)
     finally:
         edges.unpersist()
     return state, converged
@@ -403,12 +431,14 @@ def _frontier_reach(
     the union of the per-hop checkpointed frontiers (no checkpoint of
     its own), anti-joined by a shuffle join on the (*keys, node)
     distinct, so nothing |V|-sized is broadcast and a hop costs one
-    broadcast job, one checkpoint job and the halt probe.  `max_hops`
-    is a horizon, not a convergence proof.  Returns the visited frame,
-    seeds included."""
+    broadcast job and one checkpoint job; the halt probe is the row
+    count that checkpoint observes (an empty frontier stops the loop).
+    `max_hops` is a horizon, not a convergence proof.  Returns the
+    visited frame, seeds included."""
     keys = list(keys)
     as_src = [*keys, F.col("node").alias("src")]  # built once (see _scc_min_label)
     as_node = [*keys, F.col("dst").alias("node")]
+    rows = F.lit(True)
     visited = frontier = _checkpoint(seeds)
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -417,8 +447,8 @@ def _frontier_reach(
         frontier = nxt.join(visited.select(*keys, "node"), [*keys, "node"], "left_anti")
         if "d" in seeds.columns:
             frontier = frontier.withColumn("d", F.lit(hop))
-        frontier = _checkpoint(frontier)
-        if frontier.isEmpty():
+        frontier, n = _checkpoint(frontier, rows)
+        if n == 0:
             break
         visited = visited.unionByName(frontier)
     return visited
@@ -498,7 +528,7 @@ def multi_source_bfs(
     spark = graph.edges.sparkSession
     if _edge_count(graph) == 0:  # no rows, like the local route
         return spark.createDataFrame([], schema)
-    seeds = spark.createDataFrame([(s, s, 0) for s in sources], ["lm", "node", "d"])
+    seeds = spark.createDataFrame([(s, s, 0) for s in sources], schema)
     return _frontier_reach(graph.edges, seeds, max_hops, keys=("lm",))
 
 
@@ -548,7 +578,7 @@ def connected_components(
         update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
         iterations=max_iter,
         schema=schema,
-        delta=lambda state: state.filter(changed).select("node", "component"),
+        delta=changed,
     )
     if not converged:
         raise NotConvergedError(
@@ -751,15 +781,19 @@ def katz_centrality(
     schema = "node string, katz double"
     if _is_local(graph, local):
         return _run_local(graph, lambda pdf: _local_katz_pdf(pdf, iterations, alpha), schema)
+    # built once, outside the superstep loop (see _scc_min_label)
+    init_cols = ["node", F.lit(1.0).alias("katz")]
+    msg_cols = [F.col("node").alias("src"), F.col("katz").alias("x")]
+    by_dst = F.col("dst").alias("node")
+    acc = F.sum("x").alias("acc")
+    katz = F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("acc"), F.lit(0.0))
+    upd_cols = ["node", katz.alias("katz")]
     return _vertex_supersteps(
         graph.edges.select("src", "dst"),
-        init=lambda nodes, nv: nodes.select("node", F.lit(1.0).alias("katz")),
-        message=lambda state: state.select(F.col("node").alias("src"), F.col("katz").alias("x")),
-        combine=lambda att: att.groupBy(F.col("dst").alias("node")).agg(F.sum("x").alias("acc")),
-        update=lambda state, msgs: state.join(msgs, "node", "left").select(
-            "node",
-            (F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("katz"),
-        ),
+        init=lambda nodes, nv: nodes.select(*init_cols),
+        message=lambda state: state.select(*msg_cols),
+        combine=lambda att: att.groupBy(by_dst).agg(acc),
+        update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
         iterations=iterations,
         schema=schema,
     )[0].select("node", "katz")
@@ -973,7 +1007,7 @@ def shortest_paths_weighted(
         update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
         iterations=max_iter,
         schema=schema,
-        delta=lambda state: state.filter(changed).select("node", "dist"),
+        delta=changed,
     )[0]
     return state.filter(dist.isNotNull()).select("node", "dist")
 
@@ -1056,19 +1090,21 @@ def _peel(
 ) -> tuple[DataFrame, int]:
     """Peel checkpointed (src, dst) edges, `n_edges` of them, to the
     k-core — the round k_core documents — until the fixpoint or
-    `max_rounds` rounds.  Each round counts the survivors once.
-    Returns the surviving edges, checkpointed, and their count."""
+    `max_rounds` rounds.  Each round's edge checkpoint observes the
+    survivor count (no count job of its own).  Returns the surviving
+    edges, checkpointed, and their count."""
     rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    rows = F.lit(True)
     for _ in rounds:
         deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(eager=True)
+        keep = _checkpoint(deg.filter(F.col("degree") >= k).select("node"))
         kb = F.broadcast(keep)
-        edges = (
+        n_before = n_edges
+        edges, n_edges = _checkpoint(
             edges.join(kb, edges.src == kb.node, "left_semi")
-            .join(kb, edges.dst == kb.node, "left_semi")
-            .localCheckpoint(eager=True)
+            .join(kb, edges.dst == kb.node, "left_semi"),
+            rows,
         )
-        n_before, n_edges = n_edges, edges.count()
         if n_edges == n_before:
             break
     return edges, n_edges
@@ -1091,8 +1127,8 @@ def k_core(
             lambda pdf: _local_kcore_pdf(pdf, k, max_iter),
             "node string, degree long",
         )
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-    edges = _peel(edges, edges.count(), k, max_iter)[0]
+    edges, n_edges = _checkpoint(graph.edges.select("src", "dst"), F.lit(True))
+    edges = _peel(edges, n_edges, k, max_iter)[0]
     return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
@@ -1160,13 +1196,16 @@ def _scc_min_label(graph: PropertyGraph, max_rounds: int, max_inner: int) -> Dat
     round keeps only edges whose endpoints are both open and in the same
     group, and every round finalizes at least each group's min node.
     Self-loops are dropped first; a node left with no edge is a
-    singleton.  `max_inner` caps the supersteps per round: a round that
-    has not converged by then, like edges still open after `max_rounds`
-    rounds, is finished by the single-task Kosaraju kernel, so labels
-    never come from an unconverged propagation."""
+    singleton, so the rounds stop once the edge checkpoint observes no
+    open edge (no probe of its own).  `max_inner` caps the supersteps
+    per round: a round that has not converged by then, like edges still
+    open after `max_rounds` rounds, is finished by the single-task
+    Kosaraju kernel, so labels never come from an unconverged
+    propagation."""
     schema = "node string, component string"
     base = graph.edges.select("src", "dst")
-    e = _checkpoint(base.filter(F.col("src") != F.col("dst")).distinct())
+    rows = F.lit(True)
+    e, n_open = _checkpoint(base.filter(F.col("src") != F.col("dst")).distinct(), rows)
     labelled: list[DataFrame] = []
     # the spec's columns are built once: every F call costs driver round trips
     fw, bw, fwd = F.col("fw"), F.col("bw"), F.col("fwd")
@@ -1183,8 +1222,9 @@ def _scc_min_label(graph: PropertyGraph, max_rounds: int, max_inner: int) -> Dat
     ]
     changed = (fw != F.col("ofw")) | (bw != F.col("obw"))
     reverse = [F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(False).alias("fwd")]
-    finished = False
     for _ in range(max_rounds):
+        if n_open == 0:
+            break
         state, converged = _vertex_supersteps(
             e.withColumn("fwd", F.lit(True)).unionByName(e.select(*reverse)),
             init=lambda nodes, nv: nodes.select(*init_cols),
@@ -1193,30 +1233,29 @@ def _scc_min_label(graph: PropertyGraph, max_rounds: int, max_inner: int) -> Dat
             update=lambda state, msgs: state.join(msgs, "node", "left").select(*upd_cols),
             iterations=max_inner,
             schema="node string, fw string, bw string",
-            delta=lambda state: state.filter(changed).select("node", "fw", "bw"),
+            delta=changed,
         )
         if not converged:
             break
         labelled.append(state.filter(fw == bw).select("node", fw.alias("component")))
         still = state.filter(fw != bw).select("node", "fw", "bw")
-        finished = still.isEmpty()
-        if finished:
-            break
-        e = _checkpoint(
+        e, n_open = _checkpoint(
             e.join(still.withColumnRenamed("node", "src"), "src")
             .join(still.withColumnRenamed("node", "dst"), ["dst", "fw", "bw"])
-            .select("src", "dst")
+            .select("src", "dst"),
+            rows,
         )
-    if not finished:
+    if n_open:
         # a round that hit max_inner, or edges still open after
         # max_rounds: finish them on one task
         labelled.append(
             _run_local(PropertyGraph(e.select(F.col("src").alias("id")), e), _kosaraju_pdf, schema)
         )
-    return (
-        _node_set(base)
-        .join(reduce(DataFrame.unionByName, labelled), "node", "left")
-        .select("node", F.coalesce("component", "node").alias("component"))
+    nodes = _node_set(base)
+    if not labelled:  # only self-loops, or no edges
+        return nodes.select("node", F.col("node").alias("component"))
+    return nodes.join(reduce(DataFrame.unionByName, labelled), "node", "left").select(
+        "node", F.coalesce("component", "node").alias("component")
     )
 
 
@@ -1262,8 +1301,7 @@ def core_decomposition(
             graph, lambda pdf: _local_coreness_pdf(pdf, max_k), "node string, coreness long"
         )
     spark = graph.edges.sparkSession
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-    n_edges = edges.count()
+    edges, n_edges = _checkpoint(graph.edges.select("src", "dst"), F.lit(True))
     levels: list[DataFrame] = []
     k = 1
     while k <= max_k and n_edges:
@@ -1308,23 +1346,27 @@ def label_propagation(
     if _is_local(graph, local):
         return _run_local(graph, lambda pdf: _local_lp_pdf(pdf, max_iter), schema)
 
+    # built once, outside the superstep loop (see _scc_min_label)
+    init_cols = ["node", F.col("node").alias("label")]
+    by_dst_label = [F.col("dst").alias("node"), F.col("label")]
+    c = F.count(F.lit(1)).alias("c")
+    w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label").asc())
+    rn = F.row_number().over(w).alias("rn")
+    first = F.col("rn") == 1
+    best_cols = [F.col("node").alias("bnode"), F.col("label").alias("best_label")]
+    is_best = F.col("node") == F.col("bnode")
+    upd_cols = ["node", F.coalesce(F.col("best_label"), F.col("label")).alias("label")]
+
     def combine(att):
-        counts = att.groupBy(F.col("dst").alias("node"), F.col("label")).agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label").asc())
-        return counts.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select(
-            F.col("node").alias("bnode"), F.col("label").alias("best_label")
-        )
+        counts = att.groupBy(*by_dst_label).agg(c)
+        return counts.select("*", rn).filter(first).select(*best_cols)
 
     return _vertex_supersteps(
         graph.edges.select("src", "dst"),
-        init=lambda nodes, nv: nodes.select("node", F.col("node").alias("label")),
+        init=lambda nodes, nv: nodes.select(*init_cols),
         message=lambda state: state.withColumnRenamed("node", "src"),
         combine=combine,
-        update=lambda state, best: state.join(best, state.node == F.col("bnode"), "left").select(
-            "node", F.coalesce(F.col("best_label"), F.col("label")).alias("label")
-        ),
+        update=lambda state, best: state.join(best, is_best, "left").select(*upd_cols),
         iterations=max_iter,
         schema=schema,
     )[0]

@@ -21,7 +21,8 @@ the vertex-state kernels on one superstep driver
 - Lineage is truncated with one localCheckpoint per superstep
   (`_checkpoint`, planned without AQE so the state keeps its node
   partitioning) — unbounded iterative lineage is THE failure mode of
-  DataFrame loops (re-plan cost grows superlinearly).
+  DataFrame loops (re-plan cost grows superlinearly).  The same job
+  observes the count the loop halts on, so a superstep is one job.
 """
 
 from __future__ import annotations

@@ -11,6 +11,12 @@ Scale notes (100 TB design):
   cluster and let runtime statistics shrink them.
 - `maxPartitionBytes` 128m keeps scan tasks right-sized for wide parquet.
 - Arrow enabled: every pandas-UDF operator in this repo is Arrow-batched.
+- The generated-class cache holds CODEGEN_CACHE_ENTRIES classes instead
+  of Spark's 100: a graph kernel's supersteps compile hundreds of
+  whole-stage classes, and with 100 slots each call evicted the last
+  call's classes and compiled them again.  It is a static conf, so only
+  sessions built by `get_spark` get it; a session handed in through
+  `__spark_entry__` keeps its own value (`configure` cannot set it).
 """
 
 from __future__ import annotations
@@ -21,6 +27,13 @@ import warnings
 import zipfile
 
 from pyspark.sql import SparkSession
+
+# Spark's generated-class cache size (static conf
+# spark.sql.codegen.cache.maxEntries, default 100).  One graph_pregel
+# pass (pagerank, bfs, cc, scc) compiles 192 whole-stage classes and
+# eight graph kernels on a small digraph 361; with 2000 slots a
+# repeated call compiles none of them again.
+CODEGEN_CACHE_ENTRIES = 2000
 
 # session ids that already received the package zip via addPyFile
 _SHIPPED: set = set()
@@ -121,6 +134,7 @@ def get_spark(app_name: str = "graph-spark") -> SparkSession:
         # explicit local=True kernels at 20M edges.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     return configure(spark)

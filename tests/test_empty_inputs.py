@@ -72,6 +72,13 @@ def test_graph_algorithms_on_empty(spark):
         assert alg.bfs_distances(g, "x", 2, local=local).count() == 0, local
         assert alg.multi_source_bfs(g, ["x", "y"], 2, local=local).count() == 0, local
         assert alg.shortest_paths_weighted(gw, "x", "w", local=local).count() == 0, local
+    # no landmarks on a graph with edges: no rows on both routes, and
+    # the distributed seed frame keeps the declared schema
+    e = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    ge = PropertyGraph(e.select(F.col("src").alias("id")).distinct(), e)
+    for local in (True, False):
+        out = alg.multi_source_bfs(ge, [], 2, local=local)
+        assert out.count() == 0 and out.columns == ["lm", "node", "d"], local
 
 
 def test_relational_ops_on_empty(spark):
